@@ -64,15 +64,18 @@ object Enrich {
     * RFC 3339 if it parses; else HHMM fallback on the Kafka ts date. */
   def eventTime(kafkaTs: Column, timeStr: Column): Column = {
     val t = trim(timeStr)
-    // Go's time.Parse(time.RFC3339) accepts any fractional-second precision;
-    // Spark's 'S' patterns demand an exact digit count, so try each length
-    // 1–9 (coalesce short-circuits: non-fraction inputs only evaluate the
-    // first pattern).
-    val patterns = "yyyy-MM-dd'T'HH:mm:ssXXX" +:
-      (1 to 9).map(n => s"yyyy-MM-dd'T'HH:mm:ss.${"S" * n}XXX")
-    val rfc3339 = coalesce(patterns.map(p => try_to_timestamp(t, lit(p))): _*)
+    // Go's time.Parse(time.RFC3339) accepts any fractional-second precision.
+    // Spark's parser takes 1 to n fraction digits for a run of n 'S', so the
+    // 9-'S' pattern covers fractions of 1 to 9 digits (nanoseconds); longer
+    // ones fall through to the HHMM path.
+    val rfc3339 = coalesce(
+      Seq("yyyy-MM-dd'T'HH:mm:ssXXX", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSSSXXX")
+        .map(p => try_to_timestamp(t, lit(p))): _*)
+    // Both patterns need the 'T' separator (matched case-insensitively), so
+    // a string without one — HHMM times, the common case — skips the parses.
+    val hasT = t.contains("T") || t.contains("t")
     when(t === "", kafkaTs)
-      .otherwise(coalesce(rfc3339, hhmmTimestamp(kafkaTs, timeStr)))
+      .otherwise(coalesce(when(hasT, rfc3339), hhmmTimestamp(kafkaTs, timeStr)))
   }
 
   // ---------------------------------------------------------------- P6
@@ -204,7 +207,7 @@ object Enrich {
       s"enrich() requires spark.sql.session.timeZone=UTC (got $tz): " +
         "hour buckets and HHMM base dates are defined in UTC")
     // Staged projections, not one flat select: the expensive parses
-    // (eventTime: 3 timestamp patterns + HHMM; magnitude: trim/regex/cast)
+    // (eventTime: 2 timestamp patterns + HHMM; magnitude: trim/regex/cast)
     // feed multiple downstream columns, and Catalyst's CollapseProject keeps
     // a projection boundary when a non-cheap expression is referenced more
     // than once — so each parse runs once per row instead of once per use.

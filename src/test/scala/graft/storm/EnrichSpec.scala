@@ -1,7 +1,7 @@
 package graft.storm
 
 import graft.SparkTestSession
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -96,6 +96,65 @@ class EnrichSpec extends AnyFunSuite {
       "2024-05-01T12:30:00Z" -> "2024-05-01 12:30:00", // RFC 3339
       "abcd" -> "2024-04-26 00:00:00")
     for ((t, want) <- cases) assert(et(t) == want, s"time '$t'")
+  }
+
+  // The ten-pattern RFC 3339 parse `eventTime` used before the two-pattern
+  // form: one pattern per fraction length 1-9, tried on every string.
+  private def tenPatternEventTime(kafkaTs: Column, timeStr: Column): Column = {
+    val t = trim(timeStr)
+    val patterns = "yyyy-MM-dd'T'HH:mm:ssXXX" +:
+      (1 to 9).map(n => s"yyyy-MM-dd'T'HH:mm:ss.${"S" * n}XXX")
+    val rfc3339 = coalesce(patterns.map(p => try_to_timestamp(t, lit(p))): _*)
+    when(t === "", kafkaTs)
+      .otherwise(coalesce(rfc3339, Enrich.hhmmTimestamp(kafkaTs, timeStr)))
+  }
+
+  test("two-pattern event time equals the ten-pattern parse") {
+    val fractions = for {
+      n <- 1 to 11
+      zone <- Seq("Z", "-07:00")
+    } yield s"2024-04-26T15:10:00.${"12345678901".take(n)}$zone"
+    val inputs = fractions ++ Seq(
+      "2024-04-26t15:10:00z", "2024-04-26t15:10:00.5Z",
+      "2024-04-26T15:10:00+05:30", "2024-04-26T15:10:00.123+05:30",
+      " 2024-04-26T15:10:00Z ", "", "1510", "510", "12345",
+      "2024-04-26T15:10:00.Z", "2024-04-26 15:10:00Z",
+      "+2024-04-26T15:10:00Z", "12024-04-26T15:10:00Z",
+      "2024-02-30T15:10:00Z")
+    assert(inputs.size == 36)
+    // a scanned frame, not a local relation, so the generated code runs
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(inputs.map(Row(_)), 2),
+      new org.apache.spark.sql.types.StructType().add("t", "string"))
+    val base = to_timestamp(lit("2024-04-26 00:00:00"))
+    val now = Enrich.eventTime(base, col("t"))
+    val out = df.select(col("t"),
+      (tenPatternEventTime(base, col("t")) <=> now).as("same"),
+      (now =!= base).as("parsed")).collect()
+    val differ = out.filterNot(_.getBoolean(1)).map(_.getString(0))
+    assert(differ.isEmpty, s"two-pattern parse differs on ${differ.mkString(", ")}")
+    // not vacuous: fractions of 1-9 digits parse, 10-11 fall back to base
+    val parsed = out.filter(_.getBoolean(2)).map(_.getString(0)).toSet
+    assert(fractions.filter(parsed) == fractions.take(18))
+  }
+
+  test("the fused enrich method does not grow past its measured bytecode size") {
+    // HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
+    // (DontCompileHugeMethods is on by default), so the fused Enrich method
+    // already runs interpreted; the guard is its measured size, so it does
+    // not grow further past that limit unnoticed.
+    val maxEnrichMethodBytes = 8889
+    val raw = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("""{"Time":"1510"}""")), 1),
+      new org.apache.spark.sql.types.StructType().add("value", "string"))
+      .withColumn("timestamp", to_timestamp(lit("2024-04-26 00:00:00")))
+    val plan = Enrich.enrich(Enrich.parseRawJson(raw), keep = Seq("parse_error"))
+      .queryExecution.executedPlan
+    val maxMethod = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+      .map(_._3.maxMethodCodeSize).max
+    assert(maxMethod <= maxEnrichMethodBytes,
+      s"largest generated Enrich method is $maxMethod bytes " +
+        s"(guard $maxEnrichMethodBytes)")
   }
 
   // -------------------------------------------------- office + location

@@ -75,6 +75,103 @@ class StormStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** Runs `f` and returns the Java source of every class Spark's code
+    * generator compiled meanwhile: its DEBUG log line carries the source. */
+  private def compiledDuring(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("codegen-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.DEBUG) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val (level, additive) = (logger.getLevel, logger.isAdditive)
+    logger.addAppender(capture)
+    logger.setAdditive(false)
+    logger.setLevel(Level.DEBUG)
+    try f
+    finally {
+      logger.setLevel(level)
+      logger.setAdditive(additive)
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq.map(_.trim)
+  }
+
+  test("Enrich compiles once: later micro-batches compile only the source stage") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val env = mem.toDF()
+      .withColumn("timestamp", to_timestamp(lit("2024-04-26 00:00:00")))
+    val q = StormStream.runWithForeachBatch(env,
+      StormStream.Config(checkpointDir =
+        java.nio.file.Files.createTempDirectory("ckpt-codegen").toString,
+        flushInterval = "0 milliseconds"),
+      g => g.collect(), p => p.collect())
+    def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      for (i <- 1 to 4) {
+        val before = compilations
+        val compiled = compiledDuring {
+          mem.addData(goodJson.replace("1510", s"151$i"), s"bad $i")
+          q.processAllAvailable()
+        }
+        assert(compilations - before == compiled.size,
+          s"batch $i: the log missed a compilation")
+        if (i > 1) {
+          // The micro-batch timestamp is a literal in the streaming source
+          // projection, so that stage compiles anew every batch (once on the
+          // driver, once for the task threads' class loader). Everything the
+          // batch function runs over it — parse, Enrich, the count, the
+          // wire projection, the sinks — must hit the codegen cache.
+          val source = org.apache.spark.sql.execution.debug
+            .codegenStringSeq(q).map(_._2.trim).toSet
+          val other = compiled.filterNot(source)
+          assert(other.isEmpty, s"batch $i compiled ${other.size} class(es) " +
+            s"besides the source stage:\n${other.map(_.take(600)).mkString("\n---\n")}")
+        }
+      }
+    } finally q.stop()
+  }
+
+  test("a batch replayed after a restart is byte-identical on the wire (T2)") {
+    import java.nio.file.{Files, Paths}
+    val in = Files.createTempDirectory("replay_in")
+    val ckpt = Files.createTempDirectory("replay_ckpt").toString
+    Files.writeString(in.resolve("part-0.json"), Seq(goodJson,
+      goodJson.replace("\"1510\"", "\"2024-04-26T15:33:00.25-05:00\""),
+      "{not json").mkString("\n"))
+    def drain(): Seq[(Seq[Byte], String, Seq[(String, Seq[Byte])])] = {
+      var out = Seq.empty[Row]
+      val q = StormStream.runWithForeachBatch(
+        spark.readStream.text(in.toString)
+          .withColumn("timestamp", to_timestamp(lit("2024-04-26 00:00:00"))),
+        StormStream.Config(checkpointDir = ckpt, flushInterval = "0 milliseconds"),
+        g => out = out ++ g.collect(), _ => ())
+      try q.processAllAvailable() finally q.stop()
+      out.map(r => (r.getAs[Array[Byte]]("key").toSeq, r.getAs[String]("value"),
+        r.getSeq[Row](2).map(h => (h.getString(0), h.getAs[Array[Byte]](1).toSeq))))
+        .sortBy(_._2)
+    }
+    val first = drain()
+    assert(first.size == 2)
+    // un-commit batch 0: the restarted query runs it again from its offset
+    // log entry; wait for the clock to pass a wire-format second first, so a
+    // processed_at taken from the wall clock would show in the replay
+    Files.delete(Paths.get(ckpt, "commits", "0"))
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".0.crc"))
+    Thread.sleep(1100)
+    assert(drain() == first)
+  }
+
   test("watermarked hourly severity counts (windowed stateful agg)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
