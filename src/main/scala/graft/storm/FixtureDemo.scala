@@ -21,8 +21,7 @@ object FixtureDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val fixture = args.headOption.getOrElse(
-      "/root/reference/data/mock/storm_reports_240426_combined.json")
+    val fixture = args.headOption.getOrElse(StormQueries.FixturePath)
 
     // genmock injects RawEvent{Timestamp: 2024-04-26 00:00 UTC} and a fixed
     // clock of 2024-04-27 06:00 UTC (cmd/genmock/main.go:29,61-64).

@@ -223,6 +223,15 @@ object StormQueries {
     * hash-checked gate row. */
   val FixturePath = "/root/reference/data/mock/storm_reports_240426_combined.json"
 
+  /** The fixture's first record ("8 ESE Chappel", FIXTURES.md §1) as a
+    * one-record JSON array, committed in the repo and resolved from the
+    * repo root like `plans.lock`. It stands in for [[FixturePath]] where
+    * the reference checkout is absent, but only where the other 270
+    * records cannot matter: plan inspection
+    * ([[graft.plans.PlanDigest.planQueries]]) and row-local specs. No
+    * gate value is computed over it. */
+  val FixtureFirstRecordPath = "data/storm_fixture_first_record.json"
+
   private val fixtureRawSql: String =
     s"""raw AS (
       |  SELECT TIMESTAMP '2024-04-26 00:00:00' AS kts,
@@ -270,9 +279,13 @@ object StormQueries {
     * reads the same fixture file via read_json and re-runs the rule chain.
     * (The nested wire shape stays covered by ScalaTest goldens +
     * FixtureDemo.) */
-  def stormFixture(s: SparkSession, dir: String): DataFrame = {
+  def stormFixture(s: SparkSession, dir: String): DataFrame =
+    stormFixtureAt(s, FixturePath)
+
+  /** [[stormFixture]] over any JSON array file of the fixture's shape. */
+  def stormFixtureAt(s: SparkSession, path: String): DataFrame = {
     val raw = s.read.option("multiLine", true).schema(Model.rawSchema)
-      .json(FixturePath)
+      .json(path)
       .withColumn("kafka_timestamp", to_timestamp(lit("2024-04-26 00:00:00")))
     Enrich.enrich(raw, processedAt = to_timestamp(lit("2024-04-27 06:00:00")))
       .select(

@@ -13,10 +13,11 @@ object OutlineDump {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val queries = graft.plans.PlanDigest.planQueries()
     args.foreach { name =>
       val plan = graft.plans.PlanDigest.withFullPlanStrings(spark)(
         graft.plans.PlanDigest.normalize(
-          graft.SparkEntry.queries(name)(
+          queries(name)(
             spark, graft.plans.PlanDigest.LockSfDir)
             .queryExecution.sparkPlan.treeString))
       println(s"=== $name")

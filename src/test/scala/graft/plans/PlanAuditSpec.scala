@@ -167,7 +167,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("no query plans an unintended cartesian product") {
     // broadcast single-row crossJoins compile to BroadcastNestedLoopJoin,
     // which is fine; a CartesianProduct would shuffle |A|x|B| rows.
-    for ((name, fn) <- graft.SparkEntry.queries) {
+    for ((name, fn) <- PlanDigest.planQueries()) {
       val plan = fn(spark, sf).queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a cartesian product")

@@ -8,7 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * exchange, un-pushed filter) fails here even while the value-hash gate
   * stays green; regenerate the lockfile with
   * `sbt "runMain graft.plans.PlanLockMain"` ONLY when the change is
-  * intentional, and let the lockfile diff carry the review. */
+  * intentional, and let the lockfile diff carry the review. Neither the
+  * check nor the regeneration needs the reference checkout: both build
+  * the queries through [[PlanDigest.planQueries]], which plans
+  * `storm_fixture` over the committed first record where the 271-record
+  * file is absent. That plan does not depend on the file's contents (the
+  * read schema is explicit and [[PlanDigest.normalize]] strips the path),
+  * so its digest is checked against the lock either way. */
 class PlanLockSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -68,7 +74,7 @@ class PlanLockSpec extends AnyFunSuite {
           // reconstruction already matched the lock. A genuine plan
           // regression is deterministic per construction and still
           // fails here.
-          val retry = SparkEntry.queries(name)(spark, PlanDigest.LockSfDir)
+          val retry = PlanDigest.planQueries()(name)(spark, PlanDigest.LockSfDir)
           if (PlanDigest.digestOf(retry) == locked(name)) {
             info(s"$name: transient first-construction digest healed on " +
               "reconstruction (stale session state, not plan drift)")
