@@ -106,7 +106,7 @@ object Bench {
     // verdict: dedup_prefix_jaccard's 2.21 → 3.86 s was the (prefix,
     // doc-sets) memo materialization landing on whichever consumer ran
     // first — a first-payer artifact, not a plan change). Forcing every
-    // one-slot memo here, in a fixed order, makes per-query seconds
+    // memo here, in a fixed order, makes per-query seconds
     // steady-state and round-over-round comparable; the per-family build
     // cost is emitted as "memo_sec". Order matters only in that
     // lsh_artifacts consumes pruned_shingles etc. — each row times
@@ -129,8 +129,8 @@ object Bench {
         graft.sources.DropAudit.dropAudit(spark, sfDir); () }),
       ("contam_pairs", () => {
         graft.dedup.DedupQueries.decontaminate(spark, sfDir); () }),
-      ("substring_grams",
-        () => graft.dedup.SubstringDedup.warmGrams(spark, sfDir)),
+      ("substring_grams", () => {
+        graft.dedup.SubstringDedup.gramMemo(spark, sfDir); () }),
       ("simhash_pairs", () => {
         graft.dedup.DedupQueries.dedupSimhashHamming(spark, sfDir); () }),
       ("prefix_docsets", () => graft.dedup.PrefixJoin.warm(spark, sfDir)),
@@ -142,16 +142,21 @@ object Bench {
       // tuned wave — previously landed on the tier's alphabetical first
       // payer as one opaque number). Tuned also pays the dial
       // certification (probe curve + choice) its wave consumes.
-      ("bitext_memo_brute", () => graft.sim.BitextMine.warmBrute(spark, sfDir)),
-      ("bitext_memo_ivf", () => graft.sim.BitextMine.warmIvf(spark, sfDir)),
+      ("bitext_memo_brute", () => {
+        graft.sim.BitextMine.bruteMemo(spark, sfDir); () }),
+      ("bitext_memo_ivf", () => {
+        graft.sim.BitextMine.ivfMemo(spark, sfDir); () }),
       ("bitext_memo_probes", () => graft.sim.BitextMine.warmProbes(spark, sfDir)),
-      ("bitext_memo_tuned", () => graft.sim.BitextMine.warmTuned(spark, sfDir)),
+      ("bitext_memo_tuned", () => {
+        graft.sim.BitextMine.tunedMemo(spark, sfDir); () }),
       ("pq_model", () => { graft.sim.Pq.encoded(spark, sfDir); () }),
       ("knn_edges", () => { graft.sim.GraphStats.mutualEdges(spark, sfDir); () }),
-      ("exact_nf", () => graft.sim.Neighborhood.warmExact(spark, sfDir)),
-      ("kcore_peel", () => graft.sim.KCore.warmPeel(spark, sfDir)),
-      ("recrawl_delta",
-        () => graft.text.CrawlDedup.warmRecrawlDelta(spark, sfDir)),
+      ("exact_nf", () => {
+        graft.sim.Neighborhood.exactMemo(spark, sfDir); () }),
+      ("kcore_peel", () => {
+        graft.sim.KCore.peelMemo(spark, sfDir); () }),
+      ("recrawl_delta", () => {
+        graft.text.CrawlDedup.deltaMemo(spark, sfDir); () }),
       ("pca_model", () => { graft.sim.EmbedPca.model(spark, sfDir); () }),
       ("quality_weights", () => {
         graft.text.QualityClassifier.weights(spark, sfDir); () }),

@@ -52,7 +52,7 @@ object Tables {
     * component keeps the stamp at least layout- and size-sensitive there.
     * (A same-length rewrite inside one mtime tick remains theoretically
     * invisible — mtime granularity is a filesystem property; callers that
-    * rewrite that fast should evict explicitly via the release hooks.) */
+    * rewrite that fast should evict explicitly via [[Memo.release]].) */
   def sourceStamp(dir: String, table: String): Long = {
     val root = java.nio.file.Paths.get(s"$dir/$table.parquet")
     if (!java.nio.file.Files.exists(root)) return 0L

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -219,33 +220,21 @@ object ConnectedComponents {
     * exhaustive-verification twin and would die in pair generation at
     * scale. Both engines derive clusters from the identical LSH-bounded,
     * Jaccard-verified pair set ([[DedupQueries.lshPairsCte]]). */
-  // One-slot memo for the most recent (session, dir): three gate queries
-  // (clusters, apply, funnel) and any real dedup session consume the same
-  // cluster labels, and the LSH pair generation + CC rounds are the most
-  // expensive chain in the engine. Same policy as the pruned-shingle and
-  // Ivf memos: eviction drops the reference, checkpoint storage is
-  // ContextCleaner-reclaimed, StopShingleSpec releases and asserts it.
-  // Keyed by the source's modification stamp too, so an in-place data
-  // rewrite invalidates instead of serving stale labels.
-  private var clusterMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
+  def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    clusterMemo(s, dir)
 
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (s, dir, graft.Tables.sourceStamp(dir, "documents"))
-    clusterMemo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val pairs = DedupQueries.dedupMinhashLsh(s, dir)
-          .select(col("a_id").as("src"), col("b_id").as("dst"))
-        val labels = connectedComponents(pairs)
-        val sizes = labels.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
-        val v = labels.join(sizes, "comp")
-          .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
-            col("cluster_size"))
-          .localCheckpoint(true)
-        clusterMemo = Some((key, v))
-        v
-    }
+  // Memoized: three gate queries (clusters, apply, funnel) and any real
+  // dedup session consume the same cluster labels, and the LSH pair
+  // generation + CC rounds are the most expensive chain in the engine.
+  private[graft] val clusterMemo = Memo("documents") { (s, dir) =>
+    val pairs = DedupQueries.dedupMinhashLsh(s, dir)
+      .select(col("a_id").as("src"), col("b_id").as("dst"))
+    val labels = connectedComponents(pairs)
+    val sizes = labels.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, "comp")
+      .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
+        col("cluster_size"))
+      .localCheckpoint(true)
   }
 
   /** Near-dup cluster-size census — the one-glance dedup severity
@@ -262,13 +251,6 @@ object ConnectedComponents {
       .groupBy("cluster_size")
       .agg(count(org.apache.spark.sql.functions.lit(1)).as("n_clusters"))
       .withColumn("n_docs", col("cluster_size") * col("n_clusters"))
-
-  /** Drop the memoized cluster labels (tests; corpus switches evict via
-    * the one-slot policy). */
-  def releaseClusters(): Unit = synchronized {
-    clusterMemo = None
-    tiersMemo = None // derived from the cluster labels — released together
-  }
 
   /** ENSEMBLE near-dup clusters — connected components over the UNION
     * of three verified pair relations, each catching duplication the
@@ -341,25 +323,14 @@ object ConnectedComponents {
     * (duplicate doc_ids only) but every consumer reads them 2+ times
     * (a count plus an anti-join membership), so each is materialized
     * once. */
-  // One-slot memo: SEVEN gate consumers re-derived the tiers per call
-  // (dedup_apply, dedup_by_source, pipeline_funnel, filter_overlap, and
-  // the three survivor-relation consumers) — each rebuild is a full
-  // corpus sha256 window pass plus a checkpoint (guide §5: don't compute
-  // twice). Same policy as clusterMemo: stamp-keyed, released together.
-  private var tiersMemo:
-    Option[((SparkSession, String, Long), (DataFrame, DataFrame))] = None
-
   def removalTiers(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val key = (s, dir, graft.Tables.sourceStamp(dir, "documents"))
-      tiersMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = buildRemovalTiers(s, dir)
-          tiersMemo = Some((key, v))
-          v
-      }
-    }
+    tiersMemo(s, dir)
+
+  // Memoized: SEVEN gate consumers read the tiers (dedup_apply,
+  // dedup_by_source, pipeline_funnel, filter_overlap, and the three
+  // survivor-relation consumers); each rebuild is a full corpus sha256
+  // window pass plus a checkpoint.
+  private[graft] val tiersMemo = Memo("documents")(buildRemovalTiers)
 
   private def buildRemovalTiers(s: SparkSession,
                                 dir: String): (DataFrame, DataFrame) = {

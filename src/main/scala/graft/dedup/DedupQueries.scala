@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.text.TextQueries.{hex32, trigrams, trigramsSql, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -105,42 +105,17 @@ object DedupQueries {
     * a shuffle join by shingle — no hot-key window anywhere. The pruned
     * result is checkpointed too, because every caller reads it 3+ times
     * (sizes + both sides of a self-join, or signature + verification). */
-  // One-slot memo for the most recent (session, dir) — four gate queries
-  // (jaccard, LSH, clusters, apply) and any real multi-query session read
-  // the same pruned relation; recomputing the corpus explode per query is
-  // pure waste. Bounded like Ivf's quantizer memo: eviction just drops the
-  // reference (localCheckpoint storage is ContextCleaner-reclaimed once
-  // unreferenced, so nothing stays pinned — StopShingleSpec releases and
-  // asserts exactly that). The key includes the source's modification
-  // stamp, so rewriting the data under the same path (fixture
-  // regeneration, an in-place pipeline rerun) invalidates rather than
-  // serving stale shingles.
-  private var prunedMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
+  def prunedShingles(s: SparkSession, dir: String): DataFrame =
+    prunedMemo(s, dir)
 
-  def prunedShingles(s: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-    prunedMemo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val sh = shingles(s, dir).localCheckpoint(true)
-        val keep = sh.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= MaxShingleDf)
-          .select(col("s"))
-        val v = sh.join(keep, "s").select(col("doc_id"), col("s"))
-          .localCheckpoint(true)
-        prunedMemo = Some((key, v))
-        v
-    }
-  }
-
-  /** Drop the memoized pruned relation (tests; long sessions switching
-    * corpora evict implicitly via the one-slot policy). */
-  def releasePrunedShingles(): Unit = synchronized {
-    prunedMemo = None
-    lshMemo = None // derived artifacts go with their source relation
-    shamMemo = None
-    contamMemo = None // shingle-derived too
+  // Memoized: four gate queries (jaccard, LSH, clusters, apply) and any
+  // real multi-query session read the same pruned relation.
+  private[graft] val prunedMemo = Memo("documents") { (s, dir) =>
+    val sh = shingles(s, dir).localCheckpoint(true)
+    val keep = sh.groupBy("s").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= MaxShingleDf)
+      .select(col("s"))
+    sh.join(keep, "s").select(col("doc_id"), col("s")).localCheckpoint(true)
   }
 
   /** SQL twin of [[prunedShingles]] (CTE `shp(doc_id, s)`; requires `sh`). */
@@ -281,32 +256,19 @@ object DedupQueries {
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .distinct()
 
-  // One-slot memo for the (signatures, verified pairs) LSH artifacts:
-  // FOUR gate queries consume the verified pair relation (the LSH gate
-  // itself, dedup_clusters' label build, dedup_bbit_minhash's estimator
-  // table, split_leakage) and the signature build + candidate verify is
-  // the dominant shared cost. Same policy and stamp-keying as
-  // prunedShingles.
-  private var lshMemo: Option[((SparkSession, String, Long),
-    (DataFrame, DataFrame))] = None
+  // Memoized: FOUR gate queries consume the verified pair relation (the
+  // LSH gate itself, dedup_clusters' label build, dedup_bbit_minhash's
+  // estimator table, split_leakage) and the signature build + candidate
+  // verify is the dominant shared cost.
+  private[graft] val lshMemo = Memo("documents") { (s, dir) =>
+    val sh = prunedShingles(s, dir)
+    val mh = minhashSignatures(sh).localCheckpoint(true)
+    (mh, verifiedLshPairs(sh, mh).localCheckpoint(true))
+  }
 
   /** Memoized (minhash signatures, LSH-verified pair relation). */
   def lshArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-      lshMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val sh = prunedShingles(s, dir)
-          val mh = minhashSignatures(sh).localCheckpoint(true)
-          val v = (mh, verifiedLshPairs(sh, mh).localCheckpoint(true))
-          lshMemo = Some((key, v))
-          v
-      }
-    }
-
-  /** Drop the memoized LSH artifacts (tests; corpus switches evict). */
-  def releaseLshArtifacts(): Unit = synchronized { lshMemo = None }
+    lshMemo(s, dir)
 
   def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     lshArtifacts(s, dir)._2
@@ -509,23 +471,14 @@ object DedupQueries {
     contamPairs(corpus.join(broadcast(eval), "s"))
   }
 
-  // One-slot memo: THREE gates consume the contamination pair relation
-  // (decontaminate, filter_overlap, release_report) and each re-ran the
-  // corpus shingle explode + eval join per call (guide §5). Pair-sized
-  // output, stamp-keyed, released with the shingle family.
-  private var contamMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
-  def decontaminate(s: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (s, dir, graft.Tables.sourceStamp(dir, "documents"))
-    contamMemo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val v = decontaminatePlan(s, dir).localCheckpoint(true)
-        contamMemo = Some((key, v))
-        v
-    }
+  // Memoized: THREE gates consume the contamination pair relation
+  // (decontaminate, filter_overlap, release_report).
+  private[graft] val contamMemo = Memo("documents") { (s, dir) =>
+    decontaminatePlan(s, dir).localCheckpoint(true)
   }
+
+  def decontaminate(s: SparkSession, dir: String): DataFrame =
+    contamMemo(s, dir)
 
   /** The frozen eval-side shingle table `(eval_id, s)` — the broadcast
     * relation an ONLINE decontaminator checks arriving documents
@@ -683,24 +636,14 @@ object DedupQueries {
     * the 32-bit hash with 8-bit blocks; a production corpus grows the
     * hash width (64-bit simhash, 6+ blocks) to pin bucket occupancy,
     * the same dial as the kNN-graph planes. */
-  // One-slot memo for the verified Hamming pair relation — TWO
-  // consumers (the gate itself and the ensemble clustering) would
-  // otherwise each rebuild signatures + block joins. Same policy and
-  // stamp-keying as lshArtifacts; released with the pruned-shingle memo.
-  private var shamMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
+  // Memoized: TWO consumers (the gate itself and the ensemble
+  // clustering) would otherwise each rebuild signatures + block joins.
+  private[graft] val shamMemo = Memo("documents") { (s, dir) =>
+    simhashHammingBuild(s, dir).localCheckpoint(true)
+  }
 
   def dedupSimhashHamming(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-      shamMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = simhashHammingBuild(s, dir).localCheckpoint(true)
-          shamMemo = Some((key, v))
-          v
-      }
-    }
+    shamMemo(s, dir)
 
   private def simhashHammingBuild(s: SparkSession, dir: String): DataFrame = {
     val sigs = Tables.parallel(s, dir, "documents")

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Memo
 import graft.dedup.DedupQueries.{prunedShingles, shinglesCte, shpCte}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -129,74 +130,44 @@ object PrefixJoin {
         round(col("jaccard"), 4).as("jaccard"))
   }
 
-  // One-slot memo for the (prefix tokens, doc sets) pair at t = 0.8 —
-  // BOTH gate queries (dedup_prefix_jaccard and the containment index)
-  // read the same two relations, and the df aggregation + per-doc
-  // window + array build are their dominant shared cost. Same bounded
-  // eviction policy as DedupQueries.prunedShingles; the key includes
-  // the source stamp so an in-place rewrite invalidates.
-  private var memo: Option[((SparkSession, String, Long),
-    (DataFrame, DataFrame))] = None
-
-  private def sharedRelations(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = synchronized {
+  // Memoized (prefix tokens, doc sets) at t = 0.8: BOTH gate queries
+  // (dedup_prefix_jaccard and the containment index) read the same two
+  // relations, and the df aggregation + per-doc window + array build are
+  // their dominant shared cost.
+  private[graft] val relationsMemo = Memo("documents") { (s, dir) =>
     // the shared prefix relation is only valid for BOTH gates while the
     // two thresholds coincide — fail loudly if one is ever retuned
     require(DedupQueries.ContainmentThreshold == PrefixThreshold,
       "containment and prefix thresholds diverged: split the memo")
-    val key = (s, dir, graft.Tables.sourceStamp(dir, "documents"))
-    memo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val sh = prunedShingles(s, dir)
-        val v = (prefixTokens(sh).localCheckpoint(true),
-          docSets(sh).localCheckpoint(true))
-        memo = Some((key, v))
-        v
-    }
+    val sh = prunedShingles(s, dir)
+    (prefixTokens(sh).localCheckpoint(true), docSets(sh).localCheckpoint(true))
   }
 
-  // One-slot memo for the VERIFIED containment pair relation: two gate
-  // consumers (dedup_containment_indexed itself and the ensemble
-  // clustering dedup_clusters_multi) read the identical candidate join +
-  // exact verification — previously re-run per consumer (~2 s each at
-  // sf0.1). Same stamp-keyed eviction as the prefix/doc-sets memo.
-  private var pairsMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
-  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, graft.Tables.sourceStamp(dir, "documents"))
-      pairsMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val sh = prunedShingles(s, dir)
-          val (prefix, ds) = sharedRelations(s, dir)
-          val full = sh.join(ds.select(col("doc_id"), col("n")), "doc_id")
-          val v = verifyContainmentWith(
-              containmentCandidates(prefix, full), ds)
-            .localCheckpoint(true)
-          pairsMemo = Some((key, v))
-          v
-      }
-    }
-
-  /** Drop the memoized relations (tests; corpus switches evict). */
-  def release(): Unit = synchronized { memo = None; pairsMemo = None }
+  // Memoized VERIFIED containment pairs: two gate consumers
+  // (dedup_containment_indexed itself and the ensemble clustering
+  // dedup_clusters_multi) read the identical candidate join + exact
+  // verification.
+  private[graft] val pairsMemo = Memo("documents") { (s, dir) =>
+    val sh = prunedShingles(s, dir)
+    val (prefix, ds) = relationsMemo(s, dir)
+    val full = sh.join(ds.select(col("doc_id"), col("n")), "doc_id")
+    verifyContainmentWith(containmentCandidates(prefix, full), ds)
+      .localCheckpoint(true)
+  }
 
   /** Force the memo build (bench memo-cost attribution). */
-  def warm(s: SparkSession, dir: String): Unit = sharedRelations(s, dir)
+  def warm(s: SparkSession, dir: String): Unit = relationsMemo(s, dir)
 
   /** Force the verified-containment memo (bench memo-cost attribution;
     * assumes [[warm]]'s relations are paid). */
   def warmContainment(s: SparkSession, dir: String): Unit = {
-    containmentPairs(s, dir); ()
+    pairsMemo(s, dir); ()
   }
 
   /** The gate query: prefix-filter candidates, verify exactly. Output
     * (and oracle) identical to the exhaustive join by the theorem. */
   def dedupPrefixJaccard(s: SparkSession, dir: String): DataFrame = {
-    val (prefix, ds) = sharedRelations(s, dir)
+    val (prefix, ds) = relationsMemo(s, dir)
     verifyWith(candidatePairs(prefix), ds)
   }
 
@@ -270,7 +241,7 @@ object PrefixJoin {
     // prefix relation serves both gate queries; sizes come from the
     // memoized doc-sets relation; the verified pair relation is itself
     // memoized (shared with dedup_clusters_multi's containment leg).
-    containmentPairs(s, dir)
+    pairsMemo(s, dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_prefix_jaccard" -> dedupPrefixJaccard,

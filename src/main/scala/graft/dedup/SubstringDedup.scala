@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.text.TextQueries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,10 +40,6 @@ object SubstringDedup {
   private def hex60(c: Column): Column =
     conv(substring(sha2(c, 256), 1, 15), 16, 10).cast("long")
 
-  /** Per flagged document: how many of its distinct k-grams appear in at
-    * least one other document (`n_dup_grams`), and the total number of
-    * (gram, other-doc) co-occurrences (`n_partner_grams` = Σ df−1, the
-    * duplication mass an excision pass would remove). */
   /** The positional k-gram relation (doc_id, n_tokens, i, gh) — ONE
     * corpus explode + sha256 pass shared by all three substring-family
     * gates (dedup_substring, dedup_substring_excise, decontam_substring
@@ -63,30 +59,16 @@ object SubstringDedup {
       .select(col("doc_id"), col("n_tokens"), col("p.i").as("i"),
         hex60(col("p.g")).as("gh"))
 
-  // one-slot memo, stamp-keyed, house pattern
-  private var gramMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
+  private[graft] val gramMemo = Memo("documents") { (s, dir) =>
+    gramPosPlan(s, dir).localCheckpoint(true)
+  }
 
-  private def gramPos(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, graft.Tables.sourceStamp(dir, "documents"))
-      gramMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = gramPosPlan(s, dir).localCheckpoint(true)
-          gramMemo = Some((key, v))
-          v
-      }
-    }
-
-  /** Drop the memoized gram relation (PlanLock fresh-state hook). */
-  def release(): Unit = synchronized { gramMemo = None }
-
-  /** Bench-attribution warm for the shared gram memo. */
-  def warmGrams(s: SparkSession, dir: String): Unit = { gramPos(s, dir); () }
-
+  /** Per flagged document: how many of its distinct k-grams appear in at
+    * least one other document (`n_dup_grams`), and the total number of
+    * (gram, other-doc) co-occurrences (`n_partner_grams` = Σ df−1, the
+    * duplication mass an excision pass would remove). */
   def dedupSubstring(s: SparkSession, dir: String): DataFrame = {
-    val grams = gramPos(s, dir)
+    val grams = gramMemo(s, dir)
       .select(col("doc_id"), col("gh"))
       .distinct() // one vote per (doc, gram)
       // read twice (df aggregation + join back) — materialize once,
@@ -112,7 +94,7 @@ object SubstringDedup {
   def dedupSubstringExcise(s: SparkSession, dir: String): DataFrame = {
     // the shared memoized gram relation serves both reads (df
     // aggregation + coverage join)
-    val gp = gramPos(s, dir)
+    val gp = gramMemo(s, dir)
     val dupGrams = gp.select(col("doc_id"), col("gh")).distinct()
       .groupBy("gh").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= DedupQueries.MaxShingleDf)
@@ -142,7 +124,7 @@ object SubstringDedup {
     * keyed by (doc, eval) pairs that actually matched — the same
     * broadcast-side-fixed family as `decontaminate`/`decontam_bloom`. */
   def decontamSubstring(s: SparkSession, dir: String): DataFrame = {
-    val gp = gramPos(s, dir)
+    val gp = gramMemo(s, dir)
       .select(col("doc_id"), col("i"), col("gh"))
     val eval = gp.filter(col("doc_id") < DedupQueries.DecontamEvalDocs)
       .select(col("doc_id").as("eval_id"), col("gh")).distinct()

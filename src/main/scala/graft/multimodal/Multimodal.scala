@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,32 +69,14 @@ object Multimodal {
   // Not `private`: Catalyst's generated deserializer needs access.
   final case class DocRow(id: Long, text: String)
 
-  // One-slot memo for the most recent (session, dir, source-stamp):
-  // seven gate queries consume the same encoded media table, and the
-  // PNG/WAV/GFV1 fixture encode is the dominant shared cost — same
-  // bounded-eviction policy as Ivf.assignments / ConnectedComponents.
-  private var lastMedia:
-    Option[((SparkSession, String, Long), Dataset[MediaRecord])] = None
-
-  /** The encoded media table, cached once per corpus (see memo note). */
+  /** The encoded media table, cached once per corpus: seven gate queries
+    * consume it, and the PNG/WAV/GFV1 fixture encode is the dominant
+    * shared cost. */
   def mediaFromDocuments(spark: SparkSession, dir: String): Dataset[MediaRecord] =
-    synchronized {
-      val key = (spark, dir, Tables.sourceStamp(dir, "documents"))
-      lastMedia match {
-        case Some((k, v)) if k == key => v
-        case prev =>
-          prev.foreach(_._2.unpersist())
-          val v = encodeMedia(spark, dir).cache()
-          lastMedia = Some((key, v))
-          v
-      }
-    }
+    mediaMemo(spark, dir)
 
-  /** Drop the memoized media table (tests; corpus switches evict). */
-  def release(): Unit = synchronized {
-    lastMedia.foreach(_._2.unpersist())
-    lastMedia = None
-  }
+  private[graft] val mediaMemo =
+    Memo("documents")((spark, dir) => encodeMedia(spark, dir).cache())
 
   /** Synthesize the media table from `documents`: kind derives from the
     * prefix-byte-sum content hash (see [[KindPrefixK]]), payload is a

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -399,80 +399,26 @@ object BitextMine {
 
   @volatile private var lastCenters: Option[Array[Array[Double]]] = None
 
-  // One-slot memos for the two mined relations (the Ivf.assignments
-  // discipline): four gates share them, and both end in a
+  // Memoized mined relations, each keyed on both tables: four gates share
+  // the brute and single-cell relations, and every build ends in a
   // localCheckpoint so the memo hands back a materialized relation.
-  // Keys carry the table stamps so an in-place data rewrite rebuilds.
-  private var bruteMemo: Option[(Any, DataFrame)] = None
-  private var ivfMemo: Option[(Any, DataFrame)] = None
-
-  private def memoKey(s: SparkSession, dir: String): Any =
-    (s, dir, Tables.sourceStamp(dir, "documents"),
-      Tables.sourceStamp(dir, "embeddings"))
-
-  private def bruteFwd(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = memoKey(s, dir)
-      bruteMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = forwardBest(docVecs(s, dir)).localCheckpoint(true)
-          bruteMemo = Some((key, v)); v
-      }
-    }
-
-  private def ivfFwd(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = memoKey(s, dir)
-      ivfMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = forwardBestIvf(s, dir).localCheckpoint(true)
-          ivfMemo = Some((key, v)); v
-      }
-    }
-
-  // per-probe-depth memos for the multiprobe regime (the recall curve
-  // sweeps several depths; the gate and the curve share the default);
-  // bounded by |MineProbes| and evicted on a corpus switch
-  private var probeMemos: Map[(Any, Int), DataFrame] = Map.empty
-
-  private def probeFwd(s: SparkSession, dir: String, np: Int): DataFrame = {
-    val key = (memoKey(s, dir), np)
-    synchronized(probeMemos.get(key)) match {
-      case Some(v) => v
-      case None =>
-        // build OUTSIDE the monitor so [[warmProbes]] can overlap the
-        // independent interior depths (§2.6); publication stays
-        // synchronized and first-write-wins, so a rare double build of
-        // the same depth resolves to one canonical relation
-        val v = forwardBestMultiprobe(s, dir, np).localCheckpoint(true)
-        synchronized {
-          probeMemos.get(key) match {
-            case Some(w) =>
-              // lost the first-write race: the losing build's eagerly
-              // checkpointed blocks were already paid for — free them
-              // instead of waiting for driver GC (round-13 advisor)
-              v.unpersist()
-              w
-            case None =>
-              // corpus-switch eviction, guarded: only evict other-corpus
-              // entries when THIS build's corpus is still the current one
-              // — a slow stale-corpus build publishing after a newer
-              // corpus's build must not evict the fresh memos (round-13
-              // advisor). Evicted relations are unpersisted; a stale
-              // build is handed back unpublished (lookups are
-              // stamp-keyed, so the caller's result stays correct).
-              if (memoKey(s, dir) == key._1) {
-                val (keep, stale) = probeMemos.partition(_._1._1 == key._1)
-                stale.valuesIterator.foreach(_.unpersist())
-                probeMemos = keep + (key -> v)
-              }
-              v
-          }
-        }
-    }
+  private[graft] val bruteMemo = Memo("documents", "embeddings") { (s, dir) =>
+    forwardBest(docVecs(s, dir)).localCheckpoint(true)
   }
+
+  private[graft] val ivfMemo = Memo("documents", "embeddings") { (s, dir) =>
+    forwardBestIvf(s, dir).localCheckpoint(true)
+  }
+
+  // one memo per interior probe depth (the recall curve sweeps them; the
+  // gate and the curve share the default), each with its own lock so
+  // [[warmProbes]] overlaps the depths
+  private val probeMemos: Map[Int, Memo[DataFrame]] =
+    MineProbes.filter(np => np > 1 && np < Ivf.NLists).map { np =>
+      np -> Memo("documents", "embeddings") { (s, dir) =>
+        forwardBestMultiprobe(s, dir, np).localCheckpoint(true)
+      }
+    }.toMap
 
   /** Forward-best relation at probe depth `np`, riding the exact-alias
     * endpoints: P=1 IS the single-cell regime (top-1 probe = assignment
@@ -480,57 +426,31 @@ object BitextMine {
     * retrieved) — both proven by MineProbes' construction, so the curve
     * reuses those memos instead of re-mining. */
   private def fwdFor(s: SparkSession, dir: String, np: Int): DataFrame =
-    if (np <= 1) ivfFwd(s, dir)
-    else if (np >= Ivf.NLists) bruteFwd(s, dir)
-    else probeFwd(s, dir, np)
+    if (np <= 1) ivfMemo(s, dir)
+    else if (np >= Ivf.NLists) bruteMemo(s, dir)
+    else probeMemos(np)(s, dir)
 
-  // one-slot memo for the tuned relation (gate + plan digest share it)
-  private var tunedMemo: Option[(Any, DataFrame)] = None
-
-  private def tunedFwd(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = memoKey(s, dir)
-      tunedMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = forwardBestTuned(s, dir).localCheckpoint(true)
-          tunedMemo = Some((key, v)); v
-      }
-    }
-
-  /** Drop the memoized relations (PlanLockSpec fresh-state hook). */
-  def release(): Unit = synchronized {
-    bruteMemo = None; ivfMemo = None; probeMemos = Map.empty
-    evalMemo = None; tunedMemo = None
+  // memoized tuned relation (gate + plan digest share it)
+  private[graft] val tunedMemo = Memo("documents", "embeddings") { (s, dir) =>
+    forwardBestTuned(s, dir).localCheckpoint(true)
   }
 
-  // Bench-attribution warms (round-12 verdict: the tier's whole memo
-  // cost landed on its alphabetical first payer — one number hiding any
-  // regression inside the shared builds). Called in dependency order by
-  // Bench's memoTimed so each line times exactly the increment it adds:
-  // brute is standalone; ivf assumes the quantizer memo is paid; probes
-  // assume ivf (cell assignments + centers); tuned assumes all three
-  // (its dial certification rides the probe curve's memos).
-  def warmBrute(s: SparkSession, dir: String): Unit = { bruteFwd(s, dir); () }
-  def warmIvf(s: SparkSession, dir: String): Unit = { ivfFwd(s, dir); () }
+  /** Bench attribution of the interior probe depths, which overlap: the
+    * quantizer memo is warmed first, then each depth's wave (independent
+    * reads of the same warm memos) back-fills the executor slots the
+    * others' stage tails leave idle (§2.6; graft.Pools bounds the wait
+    * and cancels siblings on failure). */
   def warmProbes(s: SparkSession, dir: String): Unit = {
-    val depths = MineProbes.filter(p => p > 1 && p < Ivf.NLists)
-    if (depths.isEmpty) return
-    Ivf.assignments(s, dir) // quantizer memo warm before the depths overlap
-    // the interior-depth waves are independent reads of the same warm
-    // memos — overlap them (§2.6; graft.Pools bounds the wait and cancels
-    // siblings on failure, the round-13 advisor item); each wave's jobs
-    // back-fill the executor slots the others' stage tails leave idle
+    Ivf.assignments(s, dir)
     graft.Pools.runAll(s, "bitext-probes")(
-      depths.map(np => () => probeFwd(s, dir, np)))
+      probeMemos.toSeq.sortBy(_._1).map { case (_, m) => () => m(s, dir) })
     ()
   }
-  def warmTuned(s: SparkSession, dir: String): Unit = { tunedFwd(s, dir); () }
 
   /** Gate: mined pairs — forward-best candidates above the margin
     * threshold, with the mutual (intersection-variant) flag. */
   def bitextMine(s: SparkSession, dir: String): DataFrame =
-    bruteFwd(s, dir)
+    bruteMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"),
         round(col("cos"), 4).as("cosine"),
@@ -540,7 +460,7 @@ object BitextMine {
     * probe — the recall FLOOR; the production dial is
     * [[bitextMineMultiprobe]]). */
   def bitextMineIvf(s: SparkSession, dir: String): DataFrame =
-    ivfFwd(s, dir)
+    ivfMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"),
         round(col("cos"), 4).as("cosine"),
@@ -569,7 +489,7 @@ object BitextMine {
   def bitextMineTuned(s: SparkSession, dir: String): DataFrame = {
     val choice = bitextProbeChoice(s, dir)
       .select(col("tgt_lang"), col("chosen_probe"))
-    tunedFwd(s, dir)
+    tunedMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .join(broadcast(choice), "tgt_lang")
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"),
@@ -591,19 +511,10 @@ object BitextMine {
         col("doc_id") < graft.dedup.DedupQueries.DecontamEvalDocs),
       candSlice(dv), MaskAll)
 
-  // one-slot memo for the decontam wave (one gate + spec reuse)
-  private var evalMemo: Option[(Any, DataFrame)] = None
-
-  private def evalFwd(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = memoKey(s, dir)
-      evalMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = decontamOver(docVecs(s, dir)).localCheckpoint(true)
-          evalMemo = Some((key, v)); v
-      }
-    }
+  // memoized decontam wave (one gate + spec reuse)
+  private[graft] val evalMemo = Memo("documents", "embeddings") { (s, dir) =>
+    decontamOver(docVecs(s, dir)).localCheckpoint(true)
+  }
 
   /** Gate: TRANSLATED eval contamination — the leakage path string
     * decontamination (`decontaminate`, `decontam_semantic`)
@@ -619,7 +530,7 @@ object BitextMine {
     * and the margin — not raw cosine — is what separates a translation
     * from a topically-near hub. */
   def bitextDecontam(s: SparkSession, dir: String): DataFrame =
-    evalFwd(s, dir)
+    evalMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .select(col("src_id").as("eval_id"), col("tgt_lang"),
         col("tgt_id"), round(col("cos"), 4).as("cosine"),
@@ -639,7 +550,7 @@ object BitextMine {
     val grid = langs.crossJoin(
       s.range(1).select(
         explode(array(MineProbes.map(p => lit(p.toLong)): _*)).as("nprobe")))
-    val brute = bruteFwd(s, dir)
+    val brute = bruteMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"))
     val pruned = MineProbes.map { np =>
@@ -669,7 +580,7 @@ object BitextMine {
     * language distance; CCMatrix tunes thresholds per pair). Counts plus
     * order-free margin extremes over the forward-best relation. */
   def bitextLangStats(s: SparkSession, dir: String): DataFrame =
-    bruteFwd(s, dir)
+    bruteMemo(s, dir)
       .groupBy("tgt_lang")
       .agg(count(lit(1)).as("n_best"),
         sum(when(col("margin") >= MarginThresh, 1L).otherwise(0L))
@@ -690,7 +601,7 @@ object BitextMine {
     * memoized forward-best relation: a 5-way literal explode + one
     * rollup, nearly free. */
   def bitextMarginCurve(s: SparkSession, dir: String): DataFrame =
-    bruteFwd(s, dir)
+    bruteMemo(s, dir)
       .select(col("tgt_lang"), col("margin"), col("mutual"),
         explode(array(CurveThresholds.map(lit): _*)).as("threshold"))
       .groupBy("threshold", "tgt_lang")
@@ -709,10 +620,10 @@ object BitextMine {
     val langs = Tables.parallel(s, dir, "documents")
       .filter(col("lang") =!= SrcLang)
       .select(col("lang").as("tgt_lang")).distinct()
-    val brute = bruteFwd(s, dir)
+    val brute = bruteMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"))
-    val pruned = ivfFwd(s, dir)
+    val pruned = ivfMemo(s, dir)
       .filter(col("margin") >= MarginThresh)
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"))
     val nb = brute.groupBy("tgt_lang").agg(count(lit(1)).as("n_brute"))
@@ -812,7 +723,7 @@ object BitextMine {
     // the gate's dials are total by construction (both choices emit a
     // row per language); applyThresholds' fallback is inert here but
     // keeps the gate on the same code path as the streaming loop
-    applyThresholds(tunedFwd(s, dir), th)
+    applyThresholds(tunedMemo(s, dir), th)
       .join(broadcast(pc), "tgt_lang")
       .select(col("src_id"), col("tgt_lang"), col("tgt_id"),
         round(col("cos"), 4).as("cosine"),

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,25 +49,14 @@ object EmbedPca {
       if (eig(k) > 0) 1.0 / math.sqrt(eig(k)) else 0.0
   }
 
-  // ONE memo slot holds the model AND its inlined-literal oracle SQL
-  // (the QualityClassifier discipline — stale pairs impossible), keyed
-  // by (session, dir, source stamp).
-  private var lastModel: Option[((SparkSession, String, Long),
-    (Model, Map[String, String]))] = None
+  def model(s: SparkSession, dir: String): Model = modelMemo(s, dir)._1
 
-  def model(s: SparkSession, dir: String): Model = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "embeddings"))
-    lastModel match {
-      case Some((k, (m, _))) if k == key => m
-      case _ =>
-        val m = train(s, dir)
-        lastModel = Some((key, (m, buildOracles(m))))
-        m
-    }
+  // ONE memo holds the model AND its inlined-literal oracle SQL (the
+  // QualityClassifier discipline — stale pairs impossible).
+  private[graft] val modelMemo = Memo("embeddings") { (s, dir) =>
+    val m = train(s, dir)
+    (m, buildOracles(m))
   }
-
-  /** Drop the memoized model (tests; corpus switches evict). */
-  def release(): Unit = synchronized { lastModel = None }
 
   private val Q = EmbeddingDrift.Q
 
@@ -222,5 +211,5 @@ object EmbedPca {
     "embed_pca" -> embedPca)
 
   def oracles: Map[String, String] =
-    synchronized(lastModel).map(_._2._2).getOrElse(Map.empty)
+    modelMemo.current.map(_._2).getOrElse(Map.empty)
 }

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,26 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object GraphStats {
 
-  // one-slot memo for the mutual-edge relation: four gate queries (both
-  // graph stats + both label-prop) and any production consumer read the
-  // SAME graph, and the kNN build is the dominant shared cost — same
-  // bounded-eviction policy as Ivf.assignments / Multimodal's media memo
-  private var lastEdges:
-    Option[((SparkSession, String, Long), DataFrame)] = None
-
   /** Undirected mutual-kNN edges (u < v), one row per edge — memoized
-    * per most-recent (session, dir, source stamp), eagerly materialized
-    * (the consumers all read it at least twice). */
-  def mutualEdges(s: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (s, dir, graft.Tables.sourceStamp(dir, "embeddings"))
-    lastEdges match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val e = mutualEdgesFrom(SimilarityQueries.knnGraphLshShared(s, dir))
-          .localCheckpoint(true)
-        lastEdges = Some((key, e))
-        e
-    }
+    * and eagerly materialized: four gate queries (both graph stats + both
+    * label-prop) read the SAME graph, each at least twice, and the kNN
+    * build is the dominant shared cost. */
+  def mutualEdges(s: SparkSession, dir: String): DataFrame = edgesMemo(s, dir)
+
+  private[graft] val edgesMemo = Memo("embeddings") { (s, dir) =>
+    mutualEdgesFrom(SimilarityQueries.knnGraphLshShared(s, dir))
+      .localCheckpoint(true)
   }
 
   /** Mutualization of any directed kNN relation (a_id, b_id, ...):
@@ -70,9 +60,6 @@ object GraphStats {
     mutualEdgesFrom(
       SimilarityQueries.knnGraphLsh(s, dir, SimilarityQueries.planesFor(n)))
   }
-
-  /** Drop the memoized edge relation (tests; corpus switches evict). */
-  def release(): Unit = synchronized { lastEdges = None }
 
   /** Per-node mutual degree, triangle count, and local clustering
     * coefficient 2T/(d(d−1)) (exact-integer inputs, one rounded division). */

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sim.SimilarityQueries.dot
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
@@ -41,7 +41,7 @@ object Ivf {
   /** The cell-count dial: centroids for an N-vector corpus so expected
     * cell size N/k ≤ [[CellTarget]] (never below the fixture's
     * [[NLists]]) — the standard `nlist ≈ N/target` IVF sizing. Production
-    * binding: `assignments(s, dir, nListsFor(corpusSize))`; the gate
+    * binding: `assignmentsMl(s, dir, nListsFor(corpusSize))`; the gate
     * binds [[NLists]]. Measured cell occupancy at 1×/10×/30× with the
     * dial applied: `OccupancyProbe` (results in SCALE_VALIDATION.md). */
   def nListsFor(n: Long, targetCellSize: Long = CellTarget): Int =
@@ -54,38 +54,16 @@ object Ivf {
     * vector. Deterministic (vs `df.sample`): immune to partitioning. */
   val SampleMod = 5
 
-  // memoize the most recent quantizer only (the usual working set is one
-  // corpus; a bounded slot avoids pinning stopped sessions/stale dirs and
-  // the synchronization avoids concurrent duplicate training)
-  private var lastTrained:
-    Option[((SparkSession, String, Long, Int), (DataFrame, Array[Array[Double]]))] =
-    None
+  /** Train the coarse quantizer on [[NLists]] cells and assign every
+    * vector to a cell (memoized; the assignment DataFrame is cached).
+    * Every IVF gate, SemDeDup, the IVF kNN graph and the mining tier read
+    * it; at scale the cell count follows [[nListsFor]] through
+    * [[assignmentsMl]]. */
+  def assignments(s: SparkSession, dir: String)
+      : (DataFrame, Array[Array[Double]]) = quantizerMemo(s, dir)
 
-  /** Train the coarse quantizer and assign every vector to a cell
-    * (memoized per most-recent (session, dir, source-mtime, nLists) — the
-    * stamp invalidates on an in-place data rewrite; the assignment
-    * DataFrame is cached once and unpersisted on eviction). The gate
-    * binds the fixture constant [[NLists]]; production passes
-    * `nListsFor(corpusSize)` to pin cell occupancy. */
-  def assignments(s: SparkSession, dir: String, nLists: Int = NLists):
-      (DataFrame, Array[Array[Double]]) = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "embeddings"), nLists)
-    lastTrained match {
-      case Some((k, v)) if k == key => v
-      case prev =>
-        prev.foreach(_._2._1.unpersist())
-        val v = trainAssignments(s, dir, nLists)
-        lastTrained = Some((key, v))
-        v
-    }
-  }
-
-  /** Drop the memoized quantizer (tests needing fresh-session plan
-    * state; corpus switches evict via the one-slot policy). */
-  def release(): Unit = synchronized {
-    lastTrained.foreach(_._2._1.unpersist())
-    lastTrained = None
-  }
+  private[graft] val quantizerMemo =
+    Memo("embeddings")(trainAssignments)
 
   /** Production-scale assignment — (vec_id, cell) through the fitted
     * model's own `transform` (BLAS distance loops) instead of
@@ -125,7 +103,7 @@ object Ivf {
     out
   }
 
-  private def trainAssignments(s: SparkSession, dir: String, nLists: Int):
+  private def trainAssignments(s: SparkSession, dir: String):
       (DataFrame, Array[Array[Double]]) = {
     import s.implicits._
     val e = Tables(s, dir, "embeddings")
@@ -144,10 +122,10 @@ object Ivf {
     // tiny fixtures can undersample k-means below NLists points — fall back
     // to the full set there; at scale the sample always dominates NLists
     val trainSet =
-      if (sampled.limit(nLists * 4).count() >= nLists * 4L) sampled
+      if (sampled.limit(NLists * 4).count() >= NLists * 4L) sampled
       else features
     val model = new KMeans()
-      .setK(nLists).setSeed(42L).setMaxIter(10)
+      .setK(NLists).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").setPredictionCol("cell")
       .fit(trainSet)
     val centers = model.clusterCenters.map(_.toArray)

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,34 +48,16 @@ object KCore {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
-  // One-slot memo for the peel labels: TWO gate queries (decomposition +
-  // tiers) consume the identical [[Rounds]]-round peel, and the loop is
-  // the expensive part (2 semi-joins + a degree count per round). Same
-  // policy as ConnectedComponents.dedupClusters: stamp-keyed, eviction
-  // drops the reference, released by the PlanLock fresh-state hook.
-  private var peelMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
-  def release(): Unit = synchronized { peelMemo = None }
-
-  /** Bench-attribution warm for the shared peel memo. */
-  def warmPeel(s: SparkSession, dir: String): Unit = {
-    kcoreDecomposition(s, dir); ()
-  }
-
   /** (node, peel_round NULLABLE, in_core) after [[Rounds]] rounds. */
   def kcoreDecomposition(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, graft.Tables.sourceStamp(dir, "embeddings"))
-      peelMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = kcoreOver(s, dir, GraphStats.mutualEdges(s, dir))
-            .localCheckpoint(true)
-          peelMemo = Some((key, v))
-          v
-      }
-    }
+    peelMemo(s, dir)
+
+  // Memoized: TWO gate queries (decomposition + tiers) consume the
+  // identical [[Rounds]]-round peel, and the loop is the expensive part
+  // (2 semi-joins + a degree count per round).
+  private[graft] val peelMemo = Memo("embeddings") { (s, dir) =>
+    kcoreOver(s, dir, GraphStats.mutualEdges(s, dir)).localCheckpoint(true)
+  }
 
   /** Same peeling over an explicit (u, v) edge relation. */
   def kcoreOver(s: SparkSession, dir: String, e: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,31 +78,12 @@ object Neighborhood {
         round(col("n_pairs") * lit(1.0) / lit(nNodes.toDouble), 4))
   }
 
-  // One-slot memo for the exact neighborhood function: BOTH gates
+  // Memoized exact neighborhood function: BOTH gates
   // (graph_neighborhood and graph_neighborhood_anf) consume the same
-  // MaxRadius-round exact expansion — the expensive half of the ANF
-  // gate. Bench attributes the build as its own memo line (`exact_nf`);
-  // released by the PlanLock fresh-state hook.
-  private var exactMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
-  def release(): Unit = synchronized { exactMemo = None }
-
-  private def exactNf(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, graft.Tables.sourceStamp(dir, "embeddings"))
-      exactMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = exactOver(nodesOf(s, dir), bidir(s, dir))
-            .localCheckpoint(true)
-          exactMemo = Some((key, v))
-          v
-      }
-    }
-
-  /** Bench-attribution warm for the shared exact-NF memo. */
-  def warmExact(s: SparkSession, dir: String): Unit = { exactNf(s, dir); () }
+  // MaxRadius-round exact expansion — the expensive half of the ANF gate.
+  private[graft] val exactMemo = Memo("embeddings") { (s, dir) =>
+    exactOver(nodesOf(s, dir), bidir(s, dir)).localCheckpoint(true)
+  }
 
   /** ANF estimate of N(t) for t = 1..MaxRadius (micro-units), plus the
     * exact counts — returns (radius, n_pairs, est_micro). */
@@ -153,13 +134,13 @@ object Neighborhood {
 
   /** Gate: exact neighborhood function of the mutual-kNN graph. */
   def graphNeighborhood(s: SparkSession, dir: String): DataFrame =
-    exactNf(s, dir)
+    exactMemo(s, dir)
 
   /** Gate: exact N(t) + the ANF sketch estimate folded into a
     * within-bound flag (the scale path's certification). */
   def graphNeighborhoodAnf(s: SparkSession, dir: String): DataFrame =
     anfWithExact(nodesOf(s, dir), bidir(s, dir),
-      exactNf(s, dir).select("radius", "n_pairs"))
+      exactMemo(s, dir).select("radius", "n_pairs"))
       .select(col("radius"), col("n_pairs"),
         (abs(col("est_micro") / 1e6 - col("n_pairs")) / col("n_pairs")
           <= AnfBound).as("anf_within"))

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.sim.SimilarityQueries.dot
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
@@ -36,31 +36,14 @@ object Pq {
   val RerankK = 50 // ADC candidates re-ranked exactly
   val TopK = 5
 
-  // one-slot memo, same policy as Ivf.assignments
-  private var lastTrained:
-    Option[((SparkSession, String, Long), (DataFrame, Array[Array[Array[Double]]]))] =
-    None
-
   /** Train the product codebook and encode every vector: returns the
     * cached (vec_id, label, embedding, pq_code) relation and the
-    * [[M]]×[[Ks]]×[[Ds]] codebook. */
-  def encoded(s: SparkSession, dir: String):
-      (DataFrame, Array[Array[Array[Double]]]) = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "embeddings"))
-    lastTrained match {
-      case Some((k, v)) if k == key => v
-      case prev =>
-        prev.foreach(_._2._1.unpersist())
-        val v = trainEncode(s, dir)
-        lastTrained = Some((key, v))
-        v
-    }
-  }
+    * [[M]]×[[Ks]]×[[Ds]] codebook (memoized: the encode and top-k gates
+    * and the model roundtrip share one codebook). */
+  def encoded(s: SparkSession, dir: String)
+      : (DataFrame, Array[Array[Array[Double]]]) = codebookMemo(s, dir)
 
-  def release(): Unit = synchronized {
-    lastTrained.foreach(_._2._1.unpersist())
-    lastTrained = None
-  }
+  private[graft] val codebookMemo = Memo("embeddings")(trainEncode)
 
   private def trainEncode(s: SparkSession, dir: String):
       (DataFrame, Array[Array[Array[Double]]]) = {

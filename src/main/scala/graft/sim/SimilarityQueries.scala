@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -214,32 +214,19 @@ object SimilarityQueries {
   def knnGraphLsh(s: SparkSession, dir: String): DataFrame =
     knnGraphLsh(s, dir, NumPlanes)
 
-  /** One-slot MATERIALIZED memo of the default-plane directed graph —
-    * for internal consumers that each need the whole relation: the
+  /** MATERIALIZED memo of the default-plane directed graph — for
+    * internal consumers that each need the whole relation: the
     * mutual-edge builder (GraphStats — every structure/centrality gate)
     * and PageRank's directed walk both read it; without the memo each
-    * rebuilt the bucket self-join from the scan (the r8 bench showed
-    * pagerank_knn paying a second kNN build). The `knn_graph_lsh` GATE
+    * rebuilt the bucket self-join from the scan. The `knn_graph_lsh` GATE
     * itself keeps calling the raw form so its plan lock pins the real
-    * build, not a checkpoint scan. Same bounded-eviction policy as the
-    * other artifact memos. */
+    * build, not a checkpoint scan. */
   def knnGraphLshShared(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, graft.Tables.sourceStamp(dir, "embeddings"))
-      knnLshMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val v = knnGraphLsh(s, dir, NumPlanes).localCheckpoint(true)
-          knnLshMemo = Some((key, v))
-          v
-      }
-    }
+    knnLshMemo(s, dir)
 
-  private var knnLshMemo:
-    Option[((SparkSession, String, Long), DataFrame)] = None
-
-  /** Drop the memoized default-plane graph (tests; corpus switches). */
-  def releaseKnnLsh(): Unit = synchronized { knnLshMemo = None }
+  private[graft] val knnLshMemo = Memo("embeddings") { (s, dir) =>
+    knnGraphLsh(s, dir, NumPlanes).localCheckpoint(true)
+  }
 
   /** Dialed form: production binds `planes = planesFor(corpusSize)` so
     * bucket occupancy — and with it the in-join Σ n_b² pair work — stays

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.dedup.ConnectedComponents
 import graft.text.TextQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -68,30 +68,16 @@ object CorpusManifest {
       .join(pass, Seq("doc_id"), "left_semi")
   }
 
-  // One-slot memo: FOUR gates consume the survivor relation
-  // (corpus_manifest, manifest_delta, shard_plan, train_order) and each
-  // re-assembled the funnel — a gopher corpus pass + three joins per
-  // call on top of the (now-memoized) removal tiers. Stamp-keyed,
-  // materialized once, released via [[release]] (guide §5).
-  private var survMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
   /** The survivor relation: docs that keep their exact-content group,
     * keep their near-dup cluster, and pass the Gopher rules —
     * memoized and materialized (every consumer reads it ≥ 2 times). */
-  def survivors(s: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-    survMemo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val v = survivorsPlan(s, dir).localCheckpoint(true)
-        survMemo = Some((key, v))
-        v
-    }
-  }
+  def survivors(s: SparkSession, dir: String): DataFrame = survMemo(s, dir)
 
-  /** Drop the memoized survivor relation (PlanLock fresh-state hook). */
-  def release(): Unit = synchronized { survMemo = None }
+  // Memoized: FOUR gates consume the survivor relation (corpus_manifest,
+  // manifest_delta, shard_plan, train_order).
+  private[graft] val survMemo = Memo("documents") { (s, dir) =>
+    survivorsPlan(s, dir).localCheckpoint(true)
+  }
 
   /** Per-source manifest of an already-written corpus directory — the
     * read-back half, shared by the batch gate and the streaming-sink

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.dedup.ConnectedComponents
 import graft.text.TextQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,26 +36,14 @@ import org.apache.spark.sql.functions._
   * design (an audit row per input). */
 object DropAudit {
 
-  // One-slot memo: the audit relation feeds its own gate AND
-  // release_report's per-source verdict rollup — each call re-ran the
-  // exact-dup window pass + gopher scan (guide §5). Doc-sized output,
-  // stamp-keyed; the un-materialized pipeline stays aux-lock pinned.
-  private var auditMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
-  def release(): Unit = synchronized { auditMemo = None }
-
   /** Gate: (doc_id, source, verdict, keeper_id) for every document —
     * memoized ([[dropAuditPlan]] is the pinned pipeline). */
-  def dropAudit(s: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-    auditMemo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val v = dropAuditPlan(s, dir).localCheckpoint(true)
-        auditMemo = Some((key, v))
-        v
-    }
+  def dropAudit(s: SparkSession, dir: String): DataFrame = auditMemo(s, dir)
+
+  // Memoized: the audit relation feeds its own gate AND release_report's
+  // per-source verdict rollup.
+  private[graft] val auditMemo = Memo("documents") { (s, dir) =>
+    dropAuditPlan(s, dir).localCheckpoint(true)
   }
 
   /** The audit pipeline UN-materialized (aux-lock pinned). */

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -206,31 +206,18 @@ object Bpe {
     * per-occurrence fold. The oracle is built AFTER training by inlining
     * the merge literals into a chain of DuckDB `list_reduce` folds (list-
     * of-lists accumulator — bit-identical greedy semantics). */
-  // one-slot memo for the trained merge list — bpe_encode,
-  // bpe_fertility and the model roundtrip share ONE tokenizer per
-  // corpus (training is the dominant cost: KMerges distributed
-  // pair-count rounds); keyed by (session, dir, source stamp), the
-  // EmbedPca/QualityClassifier eviction policy
-  private var lastMerges: Option[((SparkSession, String, Long),
-    Seq[(String, String)])] = None
-
   /** The corpus's trained merge list (memoized; deterministic, so a
     * fresh retrain gives the identical list). */
   def trainedMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    synchronized {
-      val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-      lastMerges match {
-        case Some((k, m)) if k == key => m
-        case _ =>
-          val m = trainMerges(
-            symbolizeWeighted(Tables.parallel(s, dir, "documents")),
-            KMerges).map(_._1)
-          lastMerges = Some((key, m)); m
-      }
-    }
+    mergesMemo(s, dir)
 
-  /** Drop the memoized merges (fresh-state hooks). */
-  def release(): Unit = synchronized { lastMerges = None }
+  // Memoized: bpe_encode, bpe_fertility and the model roundtrip share ONE
+  // tokenizer per corpus (training is the dominant cost: KMerges
+  // distributed pair-count rounds).
+  private[graft] val mergesMemo = Memo("documents") { (s, dir) =>
+    trainMerges(symbolizeWeighted(Tables.parallel(s, dir, "documents")),
+      KMerges).map(_._1)
+  }
 
   def bpeEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallel(s, dir, "documents")

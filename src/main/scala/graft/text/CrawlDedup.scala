@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.dedup.ConnectedComponents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -101,41 +101,24 @@ object CrawlDedup {
     * extracted-content checksum and the changed flag. Inner join is
     * total: both snapshots cover the identical doc set, so the target
     * domains coincide. */
-  // One-slot memo for the recrawl-delta relation: TWO gates consume it
-  // (url_recrawl_delta itself and crawl_schedule's per-host ranking),
-  // and its dominant cost is the two full extraction scans. House
-  // pattern: stamp-keyed, released by the PlanLock fresh-state hook,
-  // attributed as the `recrawl_delta` bench memo line.
-  private var deltaMemo: Option[((SparkSession, String, Long), DataFrame)] =
-    None
-
-  def release(): Unit = synchronized { deltaMemo = None }
-
-  /** Bench-attribution warm for the shared recrawl-delta memo. */
-  def warmRecrawlDelta(s: SparkSession, dir: String): Unit = {
-    urlRecrawlDelta(s, dir); ()
-  }
-
   def urlRecrawlDelta(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-      deltaMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val a = snapManifest(s, dir, edited = false, "a_")
-          val b = snapManifest(s, dir, edited = true, "b_")
-          val v = a.join(b, Seq("target"))
-            .select(col("target"),
-              regexp_extract(col("target"), UrlCanonical.SchemeHostRe, 2)
-                .as("host"),
-              col("a_n").as("n_docs"),
-              col("a_xor").as("old_xor"), col("b_xor").as("new_xor"),
-              (col("a_xor") =!= col("b_xor")).as("changed"))
-            .localCheckpoint(true)
-          deltaMemo = Some((key, v))
-          v
-      }
-    }
+    deltaMemo(s, dir)
+
+  // Memoized: TWO gates consume the recrawl delta (url_recrawl_delta
+  // itself and crawl_schedule's per-host ranking), and its dominant cost
+  // is the two full extraction scans.
+  private[graft] val deltaMemo = Memo("documents") { (s, dir) =>
+    val a = snapManifest(s, dir, edited = false, "a_")
+    val b = snapManifest(s, dir, edited = true, "b_")
+    a.join(b, Seq("target"))
+      .select(col("target"),
+        regexp_extract(col("target"), UrlCanonical.SchemeHostRe, 2)
+          .as("host"),
+        col("a_n").as("n_docs"),
+        col("a_xor").as("old_xor"), col("b_xor").as("new_xor"),
+        (col("a_xor") =!= col("b_xor")).as("changed"))
+      .localCheckpoint(true)
+  }
 
   /** Gate: the host-pair mirror matrix — for every unordered host pair,
     * how many content families are mirrored across it and how many

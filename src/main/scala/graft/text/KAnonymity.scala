@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -219,12 +219,6 @@ object KAnonymity {
         col("k.k_lang").as("k_lang"), col("k.k_source").as("k_source"),
         col("k.k_bucket").as("k_bucket"))
 
-  // one-slot memo for the chosen level + its (domain-bounded,
-  // materialized) ladder class relation — shared by the apply gate and
-  // the release report's remediated-risk column, keyed on the table
-  // stamp so an in-place rewrite rebuilds
-  private var chosenMemo: Option[(Any, (Long, DataFrame))] = None
-
   /** The ladder-level CHOICE materialized: the class-count relation over
     * all 5 ladder levels (checkpointed — domain-bounded, never
     * corpus-sized) and the minimal level within the suppression budget.
@@ -235,36 +229,31 @@ object KAnonymity {
     * from an empty corpus for a publisher. */
   private[graft] def chosenClasses(s: SparkSession,
                                    dir: String): (Long, DataFrame) =
-    synchronized {
-      val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-      chosenMemo match {
-        case Some((k, v)) if k == key => v
-        case _ =>
-          val classes = keyedDocs(s, dir)
-            .groupBy("level", "k_lang", "k_source", "k_bucket")
-            .agg(count(lit(1)).as("class_size"))
-            .localCheckpoint(true)
-          val lvls = classes.groupBy("level").agg(
-            sum(when(col("class_size") < KAnon, col("class_size"))
-              .otherwise(0L)).as("suppressed"),
-            sum(col("class_size")).as("n_total"))
-            .filter(col("suppressed") * MaxSuppressDen <=
-              col("n_total") * MaxSuppressNum)
-            .agg(min("level").as("level"))
-            .collect()
-          val level = Option(lvls.head).filterNot(_.isNullAt(0))
-            .map(_.getLong(0))
-            .getOrElse(throw new BudgetUnsatisfiableException(
-              s"k-anonymity generalization: no ladder level satisfies the " +
-                s"$MaxSuppressNum/$MaxSuppressDen suppression budget " +
-                s"(corpus smaller than K=$KAnon?) — nothing is publishable"))
-          val v = (level, classes)
-          chosenMemo = Some((key, v)); v
-      }
-    }
+    chosenMemo(s, dir)
 
-  /** Drop the memoized choice (plan-lock fresh-state hook). */
-  def release(): Unit = synchronized { chosenMemo = None }
+  // Memoized: shared by the apply gate and the release report's
+  // remediated-risk column.
+  private[graft] val chosenMemo = Memo("documents") { (s, dir) =>
+    val classes = keyedDocs(s, dir)
+      .groupBy("level", "k_lang", "k_source", "k_bucket")
+      .agg(count(lit(1)).as("class_size"))
+      .localCheckpoint(true)
+    val lvls = classes.groupBy("level").agg(
+      sum(when(col("class_size") < KAnon, col("class_size"))
+        .otherwise(0L)).as("suppressed"),
+      sum(col("class_size")).as("n_total"))
+      .filter(col("suppressed") * MaxSuppressDen <=
+        col("n_total") * MaxSuppressNum)
+      .agg(min("level").as("level"))
+      .collect()
+    val level = Option(lvls.head).filterNot(_.isNullAt(0))
+      .map(_.getLong(0))
+      .getOrElse(throw new BudgetUnsatisfiableException(
+        s"k-anonymity generalization: no ladder level satisfies the " +
+          s"$MaxSuppressNum/$MaxSuppressDen suppression budget " +
+          s"(corpus smaller than K=$KAnon?) — nothing is publishable"))
+    (level, classes)
+  }
 
   /** Gate: the APPLICATION of the chosen generalization — one row per
     * document with its quasi-identifier class AT THE CHOSEN LEVEL

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,31 +134,18 @@ object QualityClassifier {
     solve(a, b)
   }
 
-  // ONE memo slot holds weights AND their inlined-literal oracle SQL,
-  // keyed by (session, dir, source stamp) — same eviction policy as
-  // graft.sim.Ivf.assignments (invalidates on in-place data rewrite).
-  // Storing them as one value closes the round-6 ADVICE divergence by
-  // construction: the oracles served are always the ones generated from
-  // the weights currently memoized, never a stale pair from an earlier
-  // corpus.
-  private var lastModel: Option[((SparkSession, String, Long),
-    (Array[Double], Map[String, String]))] = None
-
   /** Trained weights for a corpus dir (memoized; `classifier_eval` and the
     * streaming twin reuse the gate's model instead of re-training). */
-  def weights(s: SparkSession, dir: String): Array[Double] = synchronized {
-    val key = (s, dir, Tables.sourceStamp(dir, "documents"))
-    lastModel match {
-      case Some((k, (w, _))) if k == key => w
-      case _ =>
-        val w = train(featured(Tables.parallel(s, dir, "documents")))
-        lastModel = Some((key, (w, buildOracles(w))))
-        w
-    }
-  }
+  def weights(s: SparkSession, dir: String): Array[Double] =
+    modelMemo(s, dir)._1
 
-  /** Drop the memoized model (fresh-session plan-state tests). */
-  def release(): Unit = synchronized { lastModel = None }
+  // ONE memo holds weights AND their inlined-literal oracle SQL: the
+  // oracles served are always the ones generated from the weights
+  // currently memoized, never a stale pair from an earlier corpus.
+  private[graft] val modelMemo = Memo("documents") { (s, dir) =>
+    val w = train(featured(Tables.parallel(s, dir, "documents")))
+    (w, buildOracles(w))
+  }
 
   /** Left-associated multiply-add score chain — the one evaluation order
     * both engines share: ((((w0 + w1·f1) + w2·f2) + …). */
@@ -269,5 +256,5 @@ object QualityClassifier {
     "classifier_calibration" -> classifierCalibration)
 
   def oracles: Map[String, String] =
-    synchronized(lastModel).map(_._2._2).getOrElse(Map.empty)
+    modelMemo.current.map(_._2).getOrElse(Map.empty)
 }

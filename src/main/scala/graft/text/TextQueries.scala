@@ -127,9 +127,9 @@ object TextQueries {
     * against a BROADCAST top-K vocab (hinted — it can never fall off the
     * auto-broadcast cliff) plus a broadcast single-row total, then a
     * partial-aggregated mean keyed by doc_id. The training side is
-    * vocab-sized aggregation; at production scale wrap `counts` in the
-    * one-slot corpus-memo pattern ([[graft.dedup.DedupQueries]]) to
-    * avoid re-scanning the corpus for vocab and total. */
+    * vocab-sized aggregation; at production scale wrap `counts` in a
+    * [[graft.Memo]] to avoid re-scanning the corpus for vocab and
+    * total. */
   def qualityLmScore(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables(s, dir, "documents")
       .select(col("doc_id"), explode(words(col("text"))).as("tok"))

@@ -27,7 +27,6 @@ object ContainmentIndexProbe {
     spark.sparkContext.addSparkListener(shuffle)
 
     args.foreach { dir =>
-      DedupQueries.releasePrunedShingles()
       val sh = DedupQueries.prunedShingles(spark, dir)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val full = sh.join(sizes, "doc_id")

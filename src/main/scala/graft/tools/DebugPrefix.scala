@@ -15,7 +15,6 @@ object DebugPrefix {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { dir =>
-      DedupQueries.releasePrunedShingles()
       val sh = DedupQueries.prunedShingles(spark, dir)
       val dfc = sh.groupBy("s").agg(count(lit(1)).as("df")).cache()
       val nSh = sh.count()

@@ -35,7 +35,6 @@ object LshProbe {
       println(s"PROBE $dir shingles=${sh.count()} docs=${mh.count()} " +
         s"bucket_pairs=${bucketSizes.get(0)} max_bucket=${bucketSizes.get(1)} " +
         s"n_buckets=${bucketSizes.get(2)} cands=$cands verified=$verified")
-      DedupQueries.releasePrunedShingles()
     }
     spark.stop()
   }

@@ -39,14 +39,14 @@ class BbitMinhashSpec extends AnyFunSuite {
         .map { case (id, x) => (id, x, "en", "fix", x.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       val rows = BbitMinhash.dedupBbitMinhash(spark, dir.toString).collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
           (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
       assert(rows.keySet == Set((0L, 1L)))
       assert(rows((0L, 1L)) == ((1.0, 1.0, 1.0)))
     } finally {
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))

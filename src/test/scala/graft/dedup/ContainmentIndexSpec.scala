@@ -34,7 +34,7 @@ class ContainmentIndexSpec extends AnyFunSuite {
         .map { case (id, t) => (id, t, "en", "fix", t.length.toLong) }
       docs.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
 
       val exhaustive = rel(DedupQueries.dedupContainment(spark, dir.toString))
       val indexed = rel(PrefixJoin.dedupContainmentIndexed(spark, dir.toString))
@@ -43,7 +43,7 @@ class ContainmentIndexSpec extends AnyFunSuite {
       assert(indexed == exhaustive,
         s"indexed ${indexed.size} vs exhaustive ${exhaustive.size}")
     } finally {
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
@@ -52,7 +52,7 @@ class ContainmentIndexSpec extends AnyFunSuite {
 
   test("sf0.001 corpus: indexed equals exhaustive; candidates < exhaustive pair relation") {
     val dir = "/root/testdata/sf0.001"
-    DedupQueries.releasePrunedShingles()
+    graft.Memo.releaseAll()
     val exhaustive = rel(DedupQueries.dedupContainment(spark, dir))
     val indexed = rel(PrefixJoin.dedupContainmentIndexed(spark, dir))
     assert(exhaustive.nonEmpty, "gate corpus must have containment pairs")

@@ -25,7 +25,7 @@ class ContainmentSpec extends AnyFunSuite {
         .map { case (id, t) => (id, t, "en", "fix", t.length.toLong) }
       docs.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      DedupQueries.releasePrunedShingles() // fresh shingle memo for the temp corpus
+      graft.Memo.releaseAll() // fresh memos for the temp corpus
 
       val got = DedupQueries.dedupContainment(spark, dir.toString).collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
@@ -40,7 +40,7 @@ class ContainmentSpec extends AnyFunSuite {
       assert(!jacc.contains((0L, 1L)),
         "planted pair must be BELOW the symmetric Jaccard threshold")
     } finally {
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))

@@ -38,7 +38,7 @@ class GroupedLshSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("groupedlsh")
     try f(dir.toString)
     finally {
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
@@ -53,7 +53,7 @@ class GroupedLshSpec extends AnyFunSuite {
     withCorpus { dir =>
       megaCorpus(dir)
       val grouped = pairSet(DedupQueries.dedupMinhashLshGrouped(spark, dir))
-      DedupQueries.releaseLshArtifacts()
+      DedupQueries.lshMemo.release()
       val flat = pairSet(DedupQueries.dedupMinhashLsh(spark, dir))
       assert(grouped == flat,
         s"grouped minus flat: ${(grouped -- flat).take(5)}; " +

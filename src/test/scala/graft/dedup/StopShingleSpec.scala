@@ -170,10 +170,9 @@ class StopShingleSpec extends AnyFunSuite {
     SubstringDedup.dedupSubstring(spark, sf).collect()
     ConnectedComponents.dedupClusters(spark, sf).collect()
     graft.text.TextQueries.termRarityTopk(spark, sf).collect()
-    // drop the deliberate one-slot memos first: after release, EVERY
+    // drop the deliberate memos first: after release, EVERY
     // checkpointed relation must be unreferenced
-    DedupQueries.releasePrunedShingles()
-    ConnectedComponents.releaseClusters()
+    graft.Memo.releaseAll()
     // localCheckpoint materializations are reclaimed by the ContextCleaner
     // once unreferenced — a session-lifetime .cache() would never be. Poll
     // a few GC cycles for the cleaner to drain its reference queue.

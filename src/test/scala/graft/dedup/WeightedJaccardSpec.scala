@@ -25,7 +25,7 @@ class WeightedJaccardSpec extends AnyFunSuite {
         .map { case (id, x) => (id, x, "en", "fix", x.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       val rows = DedupQueries.dedupWeightedJaccard(spark, dir.toString)
         .collect().map(r => (r.getLong(0), r.getLong(1)) ->
           (r.getDouble(2), r.getDouble(3))).toMap
@@ -33,7 +33,7 @@ class WeightedJaccardSpec extends AnyFunSuite {
       val (j, wj) = rows((0L, 1L))
       assert(j == 1.0 && wj == 1.0, s"identical docs must score 1.0/1.0, got $j/$wj")
     } finally {
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
@@ -55,7 +55,7 @@ class WeightedJaccardSpec extends AnyFunSuite {
       docs.map { case (id, x) => (id, x, "en", "fix", x.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       val rows = DedupQueries.dedupWeightedJaccard(spark, dir.toString)
         .collect().map(r => (r.getLong(0), r.getLong(1)) ->
           (r.getDouble(2), r.getDouble(3))).toMap
@@ -68,7 +68,7 @@ class WeightedJaccardSpec extends AnyFunSuite {
       assert(rows.keySet == lsh)
       assert(rows.nonEmpty)
     } finally {
-      DedupQueries.releasePrunedShingles()
+      graft.Memo.releaseAll()
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))

@@ -35,7 +35,7 @@ class SceneChangeSpec extends AnyFunSuite {
       assert(rows.toSeq == Seq((0L, s, true), (1L, 0L, false), (2L, s, true)),
         s"rows: ${rows.toSeq}, expected s=$s")
     } finally {
-      Multimodal.release() // drop the memo pinned to the temp dir
+      Multimodal.mediaMemo.release() // drop the memo pinned to the temp dir
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))

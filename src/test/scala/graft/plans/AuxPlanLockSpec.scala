@@ -17,8 +17,7 @@ class AuxPlanLockSpec extends AnyFunSuite {
 
   private def freshPlanState(): Unit = {
     spark.catalog.clearCache()
-    graft.sim.Ivf.release()
-    graft.sim.BitextMine.release()
+    graft.Memo.releaseAll()
   }
 
   test("every auxiliary pipeline plan matches plans_aux.lock") {

@@ -23,31 +23,13 @@ class PlanLockSpec extends AnyFunSuite {
     * in the cache manager rewrites any later query whose plan contains
     * the cached fragment into an InMemoryTableScan) or engine memos
     * warm. Restore fresh-session plan conditions: clear the cache and
-    * release every one-slot memo so the digest pass rebuilds exactly
-    * the state the lockfile was generated under. */
+    * release every memo (the media memo's Dataset would otherwise
+    * outlive its cleared cache entry, and later media plans would lose
+    * their InMemoryTableScan), so the digest pass rebuilds exactly the
+    * state the lockfile was generated under. */
   private def freshPlanState(): Unit = {
     spark.catalog.clearCache()
-    graft.dedup.DedupQueries.releasePrunedShingles() // + LSH artifacts
-    graft.dedup.ConnectedComponents.releaseClusters()
-    graft.sources.CorpusManifest.release()
-    graft.sources.DropAudit.release()
-    graft.dedup.SubstringDedup.release()
-    graft.sim.KCore.release()
-    graft.sim.Neighborhood.release()
-    graft.text.CrawlDedup.release()
-    graft.dedup.PrefixJoin.release()
-    graft.sim.Ivf.release()
-    graft.sim.BitextMine.release()
-    graft.sim.Pq.release()
-    graft.sim.GraphStats.release()
-    graft.sim.EmbedPca.release()
-    graft.text.QualityClassifier.release()
-    graft.text.KAnonymity.release()
-    // clearCache() above removes the memoized media table's cache entry
-    // while the memo still holds the Dataset — later media plans would
-    // silently lose their InMemoryTableScan; drop the memo so the digest
-    // pass rebuilds cache state exactly as PlanLockMain's fresh session
-    graft.multimodal.Multimodal.release()
+    graft.Memo.releaseAll()
   }
 
   test("every gate query's physical plan matches plans.lock") {

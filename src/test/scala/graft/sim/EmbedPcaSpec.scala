@@ -74,7 +74,7 @@ class EmbedPcaSpec extends AnyFunSuite {
     val m1 = EmbedPca.model(spark, sf)
     val m2 = EmbedPca.model(spark, "/root/testdata/sf0.01")
     assert(!(m1.mean sameElements m2.mean), "different corpora, same mean?")
-    EmbedPca.release()
+    EmbedPca.modelMemo.release()
     val m1b = EmbedPca.model(spark, sf)
     assert(m1.mean.toSeq == m1b.mean.toSeq &&
       m1.w.map(_.toSeq).toSeq == m1b.w.map(_.toSeq).toSeq,

@@ -19,19 +19,19 @@ class OptimizationMemoSpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("kcore peel memo: shared relation, stable across release") {
-    graft.sim.KCore.release()
+    graft.sim.KCore.peelMemo.release()
     val a = graft.sim.KCore.kcoreDecomposition(spark, dir)
     val b = graft.sim.KCore.kcoreDecomposition(spark, dir)
     assert(a eq b, "second gate call must ride the memo")
     val rows = sortedRows(a)
-    graft.sim.KCore.release()
+    graft.sim.KCore.peelMemo.release()
     val c = graft.sim.KCore.kcoreDecomposition(spark, dir)
     assert(!(a eq c), "release must force a rebuild")
     assert(sortedRows(c) == rows, "rebuild must reproduce the peel")
   }
 
   test("exact-NF memo: graph_neighborhood and the ANF gate share it") {
-    graft.sim.Neighborhood.release()
+    graft.sim.Neighborhood.exactMemo.release()
     val a = graft.SparkEntry.queries("graph_neighborhood")(spark, dir)
     val b = graft.SparkEntry.queries("graph_neighborhood")(spark, dir)
     assert(a eq b)
@@ -42,25 +42,25 @@ class OptimizationMemoSpec extends AnyFunSuite {
   }
 
   test("containment pairs memo: gate and ensemble clustering share it") {
-    graft.dedup.PrefixJoin.release()
+    graft.dedup.PrefixJoin.pairsMemo.release()
     val a = graft.SparkEntry.queries("dedup_containment_indexed")(spark, dir)
     val b = graft.SparkEntry.queries("dedup_containment_indexed")(spark, dir)
     assert(a eq b, "second consumer must ride the memo")
     val rows = sortedRows(a)
-    graft.dedup.PrefixJoin.release()
+    graft.dedup.PrefixJoin.pairsMemo.release()
     val c = graft.SparkEntry.queries("dedup_containment_indexed")(spark, dir)
     assert(!(a eq c))
     assert(sortedRows(c) == rows)
   }
 
   test("removal tiers memo: apply/by_source/funnel consumers share it") {
-    graft.dedup.ConnectedComponents.releaseClusters()
+    graft.dedup.ConnectedComponents.tiersMemo.release()
     val (ex1, nr1) = graft.dedup.ConnectedComponents.removalTiers(spark, dir)
     val (ex2, nr2) = graft.dedup.ConnectedComponents.removalTiers(spark, dir)
     assert((ex1 eq ex2) && (nr1 eq nr2),
       "second consumer must ride the memo")
     val rows = (sortedRows(ex1), sortedRows(nr1))
-    graft.dedup.ConnectedComponents.releaseClusters()
+    graft.dedup.ConnectedComponents.tiersMemo.release()
     val (ex3, nr3) = graft.dedup.ConnectedComponents.removalTiers(spark, dir)
     assert(!(ex1 eq ex3), "release must force a rebuild")
     assert((sortedRows(ex3), sortedRows(nr3)) == rows,
@@ -68,12 +68,12 @@ class OptimizationMemoSpec extends AnyFunSuite {
   }
 
   test("survivors memo: manifest/shard/order consumers share it") {
-    graft.sources.CorpusManifest.release()
+    graft.sources.CorpusManifest.survMemo.release()
     val a = graft.sources.CorpusManifest.survivors(spark, dir)
     val b = graft.sources.CorpusManifest.survivors(spark, dir)
     assert(a eq b, "second consumer must ride the memo")
     val rows = sortedRows(a.select("doc_id"))
-    graft.sources.CorpusManifest.release()
+    graft.sources.CorpusManifest.survMemo.release()
     val c = graft.sources.CorpusManifest.survivors(spark, dir)
     assert(!(a eq c), "release must force a rebuild")
     assert(sortedRows(c.select("doc_id")) == rows,
@@ -85,12 +85,12 @@ class OptimizationMemoSpec extends AnyFunSuite {
   }
 
   test("drop-audit memo: gate and release_report share the verdicts") {
-    graft.sources.DropAudit.release()
+    graft.sources.DropAudit.auditMemo.release()
     val a = graft.sources.DropAudit.dropAudit(spark, dir)
     val b = graft.sources.DropAudit.dropAudit(spark, dir)
     assert(a eq b, "second consumer must ride the memo")
     val rows = sortedRows(a)
-    graft.sources.DropAudit.release()
+    graft.sources.DropAudit.auditMemo.release()
     val c = graft.sources.DropAudit.dropAudit(spark, dir)
     assert(!(a eq c), "release must force a rebuild")
     assert(sortedRows(c) == rows, "rebuild must reproduce the audit")
@@ -99,12 +99,12 @@ class OptimizationMemoSpec extends AnyFunSuite {
   }
 
   test("contam-pairs memo: decontaminate/filter_overlap/report share it") {
-    graft.dedup.DedupQueries.releasePrunedShingles()
+    graft.dedup.DedupQueries.contamMemo.release()
     val a = graft.dedup.DedupQueries.decontaminate(spark, dir)
     val b = graft.dedup.DedupQueries.decontaminate(spark, dir)
     assert(a eq b, "second consumer must ride the memo")
     val rows = sortedRows(a)
-    graft.dedup.DedupQueries.releasePrunedShingles()
+    graft.dedup.DedupQueries.contamMemo.release()
     val c = graft.dedup.DedupQueries.decontaminate(spark, dir)
     assert(!(a eq c), "release must force a rebuild")
     assert(sortedRows(c) == rows, "rebuild must reproduce the pairs")
@@ -113,23 +113,23 @@ class OptimizationMemoSpec extends AnyFunSuite {
   }
 
   test("substring-grams memo: the three substring gates share it") {
-    graft.dedup.SubstringDedup.release()
+    graft.dedup.SubstringDedup.gramMemo.release()
     val a = graft.SparkEntry.queries("dedup_substring")(spark, dir)
     val rows = sortedRows(a)
     // the excise gate rides the same memoized gram relation
     graft.SparkEntry.queries("dedup_substring_excise")(spark, dir).collect()
-    graft.dedup.SubstringDedup.release()
+    graft.dedup.SubstringDedup.gramMemo.release()
     val c = graft.SparkEntry.queries("dedup_substring")(spark, dir)
     assert(sortedRows(c) == rows, "rebuild must reproduce the flags")
   }
 
   test("recrawl delta memo: crawl_schedule rides url_recrawl_delta") {
-    graft.text.CrawlDedup.release()
+    graft.text.CrawlDedup.deltaMemo.release()
     val a = graft.text.CrawlDedup.urlRecrawlDelta(spark, dir)
     val b = graft.text.CrawlDedup.urlRecrawlDelta(spark, dir)
     assert(a eq b)
     val rows = sortedRows(a)
-    graft.text.CrawlDedup.release()
+    graft.text.CrawlDedup.deltaMemo.release()
     val c = graft.text.CrawlDedup.urlRecrawlDelta(spark, dir)
     assert(!(a eq c))
     assert(sortedRows(c) == rows)
