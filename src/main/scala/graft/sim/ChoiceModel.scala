@@ -1,7 +1,16 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+/** The dial table, rows sorted by language, and the sha of the
+  * quantizer it was certified against ([[IvfModel.centroidSha]] of the
+  * centers the certification sweep actually probed). A dial table is
+  * only meaningful for the index it was tuned on, so the sha rides the
+  * manifest and the bound reader refuses versions certified on a
+  * different (e.g. since-retrained) quantizer. */
+case class ChoiceDials(rows: Seq[(String, Long, Double, Boolean)],
+                       quantizerSha: String)
 
 /** Per-language mining-dial persistence — the sixth leg of the
   * model-artifact lifecycle ([[IvfModel]] centroids, [[PqModel]]
@@ -23,103 +32,56 @@ import org.apache.spark.sql.functions._
   * Scale: the artifact is languages × one row (strings + a long + a
   * double + a bool) — trivially broadcast to any fleet; deriving the
   * dials rides the memoized certification relations. */
-object ChoiceModel {
+object ChoiceModel extends graft.sources.ModelCodec[ChoiceDials] {
 
-  def modelDir(dir: String): String =
-    graft.sources.ModelStore.modelDir("bitext_choice", dir)
-
-  private def fmtD(d: Double): String = java.lang.Double.toString(d)
+  val family = "bitext_choice"
+  val partDir = "dials"
 
   /** Language-keyed canonical checksum — any corrupted depth, flipped
     * threshold, dropped language, or toggled calibration flag changes
     * the string. */
-  def choiceSha(rows: Seq[(String, Long, Double, Boolean)]): String = {
-    val canon = rows.sortBy(_._1)
-      .map { case (l, p, t, m) => s"$l:$p:${fmtD(t)}:$m" }.mkString(";")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  def choiceSha(rows: Seq[(String, Long, Double, Boolean)]): String =
+    sha256Hex(rows.sortBy(_._1)
+      .map { case (l, p, t, m) => s"$l:$p:$t:$m" }.mkString(";"))
+
+  def rows(s: SparkSession, d: ChoiceDials): DataFrame = {
+    import s.implicits._
+    d.rows.toDF("tgt_lang", "chosen_probe", "chosen_threshold", "met_target")
   }
 
-  /** Write one artifact version. `quantizerSha` BINDS the dials to the
-    * quantizer they were certified against ([[IvfModel.centroidSha]] of
-    * the centers the certification sweep actually probed): a dial table
-    * is only meaningful for the index it was tuned on, so the sha rides
-    * the manifest and [[readLatestValid]] refuses versions certified on
-    * a different (e.g. since-retrained) quantizer. */
-  def writeModel(s: SparkSession, path: String,
-                 rows: Seq[(String, Long, Double, Boolean)],
-                 quantizerSha: String): Unit = {
+  /** Language count, the recall target the depths were chosen against,
+    * the sweep thresholds, the dial sha and the quantizer binding. */
+  def manifest(s: SparkSession, d: ChoiceDials): DataFrame = {
     import s.implicits._
-    rows.toDF("tgt_lang", "chosen_probe", "chosen_threshold", "met_target")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/dials")
-    Seq((rows.length,
+    Seq((d.rows.length,
         BitextMine.RecallTargetNum, BitextMine.RecallTargetDen,
-        BitextMine.CurveThresholds.mkString(","), choiceSha(rows),
-        quantizerSha))
+        BitextMine.CurveThresholds.mkString(","), choiceSha(d.rows),
+        d.quantizerSha))
       .toDF("n_langs", "recall_num", "recall_den", "sweep", "choice_sha",
         "quantizer_sha")
-      .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** One read of a version: (rows sorted by language, manifest_ok,
-    * quantizer_sha) — exactly one dials read + one manifest read, the
-    * unit [[readLatestValid]]'s walk issues per probed version. */
-  private def readFull(s: SparkSession, path: String):
-      (Seq[(String, Long, Double, Boolean)], Boolean, String) = {
-    // decode by NAME, not position — a column reorder in a future
-    // writeModel must fail checksum validation, never silently swap
-    // fields into the wrong dial
-    val rows = s.read.parquet(s"$path/dials")
-      .select("tgt_lang", "chosen_probe", "chosen_threshold", "met_target")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-        r.getBoolean(3)))
-      .sortBy(_._1).toSeq
-    val mf = s.read.parquet(s"$path/manifest").head()
-    val ok = mf.getAs[String]("choice_sha") == choiceSha(rows) &&
-      mf.getAs[Int]("n_langs") == rows.length &&
-      mf.getAs[Long]("recall_num") == BitextMine.RecallTargetNum &&
-      mf.getAs[Long]("recall_den") == BitextMine.RecallTargetDen &&
-      mf.getAs[String]("sweep") == BitextMine.CurveThresholds.mkString(",")
-    (rows, ok, mf.getAs[String]("quantizer_sha"))
-  }
+  /** Decoded by NAME, not position — a column reorder in a future writer
+    * must fail validation, never silently swap fields into the wrong
+    * dial. */
+  def decode(parts: Array[Row], mf: Row): ChoiceDials =
+    ChoiceDials(parts.map(r => (r.getAs[String]("tgt_lang"),
+        r.getAs[Long]("chosen_probe"), r.getAs[Double]("chosen_threshold"),
+        r.getAs[Boolean]("met_target"))).sortBy(_._1).toSeq,
+      mf.getAs[String]("quantizer_sha"))
 
-  /** Reload + verify. Returns (rows sorted by language, manifest_ok). */
-  def readModel(s: SparkSession, path: String):
-      (Seq[(String, Long, Double, Boolean)], Boolean) = {
-    val (rows, ok, _) = readFull(s, path)
-    (rows, ok)
-  }
-
-  /** Newest committed, manifest-valid version (the IvfModel rollback
-    * discipline). When `quantizerSha` is given, a version is valid ONLY
-    * if it was certified against THAT quantizer — a dial artifact that
-    * predates a quantizer retrain is stale (its depths/thresholds were
-    * swept on another geometry) and silently mis-probes the new index,
-    * so the walk skips it exactly like a torn write: an OLDER matching
-    * version keeps serving, and if none matches the reload fails loudly
-    * (re-certify before mining). */
+  /** Newest valid version certified against `quantizerSha`. A dial
+    * artifact that predates a quantizer retrain is stale (its depths and
+    * thresholds were swept on another geometry) and silently mis-probes
+    * the new index, so the walk skips it exactly like a torn write: an
+    * OLDER matching version keeps serving, and if none matches the
+    * reload fails loudly (re-certify before mining). */
   def readLatestValid(s: SparkSession, base: String,
-                      quantizerSha: Option[String] = None):
-      (Int, Seq[(String, Long, Double, Boolean)], Boolean) = {
-    // the walk's predicate CAPTURES its read, so the winning version is
-    // decoded exactly once (the walk stops at the first valid version,
-    // so the last capture IS the winner) — no re-read of dials or
-    // manifest after the walk returns
-    var hit: Option[(Seq[(String, Long, Double, Boolean)], Boolean)] = None
-    val (v, _) = graft.sources.ModelStore.latestValid(base, { p =>
-      val (rows, ok, qsha) = readFull(s, p)
-      val valid = ok && quantizerSha.forall(_ == qsha)
-      if (valid) hit = Some((rows, ok))
-      valid
-    })
-      .getOrElse(sys.error(s"no valid committed model under $base" +
-        quantizerSha.fold("")(q => s" certified against quantizer $q — " +
-          "re-run the certification sweep against the current index")))
-    val (rows, ok) = hit.get
-    (v, rows, ok)
-  }
+                      quantizerSha: String): (Int, ChoiceDials) =
+    findLatestValid(s, base, _.quantizerSha == quantizerSha)
+      .getOrElse(sys.error(s"no valid committed model under $base " +
+        s"certified against quantizer $quantizerSha — re-run the " +
+        "certification sweep against the current index"))
 
   /** Gate: derive both dials (memo-riding) → versioned write → reload
     * latest valid → emit the RELOADED table, oracled against a from-
@@ -135,22 +97,18 @@ object ChoiceModel {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getBoolean(3)))
       .sortBy(_._1).toSeq
-    val base = modelDir(dir)
     // the quantizer the certification sweep actually probed (set by the
     // memoized assignment join the probe-choice derivation rides) —
     // bound into the manifest and demanded back at reload, so a dial
     // version certified on a since-retrained index can never serve
     val qsha = IvfModel.centroidSha(BitextMine.centersNow.getOrElse(
       sys.error("choice derivation did not train a quantizer")))
-    graft.sources.ModelStore.write(base,
-      p => writeModel(s, p, trained, qsha))
-    val (_, reloaded, ok) = readLatestValid(s, base, Some(qsha))
+    val reloaded =
+      roundtrip(s, dir, ChoiceDials(trained, qsha), _.quantizerSha == qsha)
     synchronized {
       lastOracle = Some(BitextMine.dialsSql(BitextMine.centersNow.get))
     }
-    reloaded
-      .toDF("tgt_lang", "chosen_probe", "chosen_threshold", "met_target")
-      .withColumn("manifest_ok", lit(ok))
+    rows(s, reloaded).withColumn("manifest_ok", lit(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,7 +2,7 @@ package graft.sim
 
 import graft.{Memo, Tables}
 import graft.sim.SimilarityQueries.dot
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -78,25 +78,7 @@ object Ivf {
     * nearest-centroid/lowest-index-tie rule; not oracle-expressible, so
     * the gate keeps the literal path. */
   def assignmentsMl(s: SparkSession, dir: String, nLists: Int): DataFrame = {
-    import s.implicits._
-    val e = Tables(s, dir, "embeddings")
-    val features = e.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        val d = emb.map(_.toDouble)
-        val n = math.sqrt(d.map(x => x * x).sum)
-        (id, Vectors.dense(if (n == 0.0) d else d.map(_ / n)))
-      }
-      .toDF("vec_id", "features")
-      .cache()
-    val sampled = features.filter(pmod(col("vec_id"), lit(SampleMod)) === 0)
-    val trainSet =
-      if (sampled.limit(nLists * 4).count() >= nLists * 4L) sampled
-      else features
-    val model = new KMeans()
-      .setK(nLists).setSeed(42L).setMaxIter(10)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(trainSet)
+    val (features, model) = fit(s, Tables(s, dir, "embeddings"), nLists)
     val out = model.transform(features).select(col("vec_id"), col("cell"))
       .localCheckpoint(true)
     features.unpersist()
@@ -105,8 +87,24 @@ object Ivf {
 
   private def trainAssignments(s: SparkSession, dir: String):
       (DataFrame, Array[Array[Double]]) = {
-    import s.implicits._
     val e = Tables(s, dir, "embeddings")
+    val (features, model) = fit(s, e, NLists)
+    val centers = model.clusterCenters.map(_.toArray)
+    // Assignment deliberately bypasses model.transform: cellExpr is the
+    // portable argmin the oracle SQL mirrors literal-for-literal, so the
+    // cell column is bit-reproducible outside Spark.
+    val assigned = e.withColumn("cell", cellExpr(centers)).cache()
+    assigned.count() // materialize before dropping the feature cache
+    features.unpersist()
+    (assigned, centers)
+  }
+
+  /** The k-means fit both assignment paths share: L2-normalized features
+    * (cached; the caller assigns from them or unpersists them) and the
+    * `nLists`-cell model fitted on the 1-in-[[SampleMod]] sample. */
+  private def fit(s: SparkSession, e: DataFrame, nLists: Int)
+      : (DataFrame, KMeansModel) = {
+    import s.implicits._
     val features = e.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .map { case (id, emb) =>
@@ -117,25 +115,18 @@ object Ivf {
         (id, Vectors.dense(if (n == 0.0) d else d.map(_ / n)))
       }
       .toDF("vec_id", "features")
-      .cache() // read once, feed both fit (sampled) and transform (full)
+      .cache() // read once: the sample count, the k-means passes, the caller
     val sampled = features.filter(pmod(col("vec_id"), lit(SampleMod)) === 0)
-    // tiny fixtures can undersample k-means below NLists points — fall back
-    // to the full set there; at scale the sample always dominates NLists
+    // tiny fixtures can undersample k-means below nLists points — fall back
+    // to the full set there; at scale the sample always dominates nLists
     val trainSet =
-      if (sampled.limit(NLists * 4).count() >= NLists * 4L) sampled
+      if (sampled.limit(nLists * 4).count() >= nLists * 4L) sampled
       else features
     val model = new KMeans()
-      .setK(NLists).setSeed(42L).setMaxIter(10)
+      .setK(nLists).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").setPredictionCol("cell")
       .fit(trainSet)
-    val centers = model.clusterCenters.map(_.toArray)
-    // Assignment deliberately bypasses model.transform: cellExpr is the
-    // portable argmin the oracle SQL mirrors literal-for-literal, so the
-    // cell column is bit-reproducible outside Spark.
-    val assigned = e.withColumn("cell", cellExpr(centers)).cache()
-    assigned.count() // materialize before dropping the feature cache
-    features.unpersist()
-    (assigned, centers)
+    (features, model)
   }
 
   /** Nearest-centroid cell as a pure SQL-expressible argmin over literal

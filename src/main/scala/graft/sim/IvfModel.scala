@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Trained-model ARTIFACT persistence — the index lifecycle story: in
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *  3. verify the manifest: the checksum is recomputed FROM THE
   *     RELOADED coefficients (canonical shortest-round-trip decimal
   *     serialization, cell-index keyed), so one flipped byte anywhere
-  *     in the artifact reds `manifest_ok`;
+  *     in the artifact invalidates the version and the reader skips it;
   *  4. re-run the full IVF query path — cell assignment, centroid
   *     ranking, probe, exact-cosine re-rank — ENTIRELY from the
   *     reloaded model.
@@ -36,82 +36,46 @@ import org.apache.spark.sql.functions._
   * megabytes — the artifact is the thing you ship to 1000 executors,
   * which is exactly why it must be storage-stable and checksummed.
   */
-object IvfModel {
+object IvfModel extends graft.sources.ModelCodec[Array[Array[Double]]] {
 
-  /** Deterministic per-(sf-dir) artifact location under the build dir;
-    * versions live in `v=<n>` subdirectories
-    * ([[graft.sources.ModelStore]]). */
-  def modelDir(dir: String): String =
-    graft.sources.ModelStore.modelDir("ivf_model", dir)
-
-  /** Production read path: newest committed, manifest-valid version —
-    * a torn or corrupted newer write is skipped and the previous
-    * version keeps serving (rollback proven in ModelStoreSpec). */
-  def readLatestValid(s: SparkSession, base: String):
-      (Int, Array[Array[Double]], Boolean, Int, Int) = {
-    // the walk's predicate CAPTURES its read (the ChoiceModel pattern):
-    // the walk stops at the first valid version, so the last capture IS
-    // the winner — no second parquet parse of centroids + manifest
-    var hit: Option[(Array[Array[Double]], Boolean, Int, Int)] = None
-    val (v, _) = graft.sources.ModelStore.latestValid(base, { p =>
-      val r = readModel(s, p)
-      if (r._2) hit = Some(r)
-      r._2
-    }).getOrElse(sys.error(s"no valid committed model under $base"))
-    val (c, ok, n, d) = hit.get
-    (v, c, ok, n, d)
-  }
+  val family = "ivf_model"
+  val partDir = "centroids"
 
   /** Canonical centroid checksum: sha256 over the cell-index-keyed,
     * shortest-round-trip decimal serialization. Any representation the
     * storage layer could corrupt (a coefficient, an index, a missing
     * cell) changes the string. */
-  def centroidSha(centers: Array[Array[Double]]): String = {
-    val canon = centers.zipWithIndex
-      .map { case (c, j) => s"$j:" + c.map(Ivf.fmtD).mkString(",") }
-      .mkString(";")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-  }
+  def centroidSha(centers: Array[Array[Double]]): String =
+    sha256Hex(centers.zipWithIndex
+      .map { case (c, j) => s"$j:" + c.mkString(",") }.mkString(";"))
 
-  /** Write the quantizer artifact: `centroids/` (one row per cell,
-    * array<double> coefficients) + `manifest/` (one row: shape, the
-    * training-sample modulus, the checksum). */
-  def writeModel(s: SparkSession, path: String,
-                 centers: Array[Array[Double]]): Unit = {
+  /** One row per cell, array<double> coefficients. */
+  def rows(s: SparkSession, centers: Array[Array[Double]]): DataFrame = {
     import s.implicits._
     centers.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
       .toDF("j", "c")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  /** Shape, the training-sample modulus, the checksum. */
+  def manifest(s: SparkSession, centers: Array[Array[Double]]): DataFrame = {
+    import s.implicits._
     Seq((centers.length, centers.headOption.map(_.length).getOrElse(0),
         Ivf.SampleMod, centroidSha(centers)))
       .toDF("n_lists", "dim", "sample_mod", "centroid_sha")
-      .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** Reload the artifact and verify it against its manifest. Returns
-    * (centers sorted by cell index, manifest_ok, n_lists, dim). */
-  def readModel(s: SparkSession, path: String):
-      (Array[Array[Double]], Boolean, Int, Int) = {
-    val centers = s.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+  /** Centers sorted by cell index. */
+  def decode(parts: Array[Row], mf: Row): Array[Array[Double]] =
+    parts.map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
-    val m = s.read.parquet(s"$path/manifest").head()
-    val ok = m.getAs[String]("centroid_sha") == centroidSha(centers) &&
-      m.getAs[Int]("n_lists") == centers.length &&
-      centers.forall(_.length == m.getAs[Int]("dim"))
-    (centers, ok, m.getAs[Int]("n_lists"), m.getAs[Int]("dim"))
-  }
 
   /** Gate: versioned write → reload latest committed valid → verify →
     * query from the RELOADED model. */
   def ivfModelRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (_, trained) = Ivf.assignments(s, dir) // train (memoized)
-    val base = modelDir(dir)
-    graft.sources.ModelStore.write(base, p => writeModel(s, p, trained))
-    val (_, reloaded, ok, nLists, dim) = readLatestValid(s, base)
+    val reloaded = roundtrip(s, dir, trained)
+    val dim = reloaded(0).length
 
     // the full query path, from the reloaded coefficients only
     val assigned = Tables(s, dir, "embeddings")
@@ -131,9 +95,9 @@ object IvfModel {
           .stripMargin)
     }
     Ivf.topkFrom(assigned, probes)
-      .withColumn("n_lists", lit(nLists.toLong))
+      .withColumn("n_lists", lit(reloaded.length.toLong))
       .withColumn("dim", lit(dim.toLong))
-      .withColumn("manifest_ok", lit(ok))
+      .withColumn("manifest_ok", lit(true))
   }
 
   /** Gate: the artifact's INGEST face — a new batch of vectors
@@ -147,9 +111,7 @@ object IvfModel {
     * shape. Scale: batch-slice projection + cell-bounded rollup. */
   def ivfAssignDelta(s: SparkSession, dir: String): DataFrame = {
     val (_, trained) = Ivf.assignments(s, dir)
-    val base = modelDir(dir)
-    graft.sources.ModelStore.write(base, p => writeModel(s, p, trained))
-    val (_, reloaded, ok, _, _) = readLatestValid(s, base)
+    val reloaded = roundtrip(s, dir, trained)
     val batchMod = graft.dedup.SnapshotDedup.BatchMod
     synchronized {
       lastDeltaOracle = Some(
@@ -166,7 +128,7 @@ object IvfModel {
       .groupBy("cell")
       .agg(count(lit(1)).as("n_new"),
         min("vec_id").as("first_vec"), max("vec_id").as("last_vec"))
-      .withColumn("manifest_ok", lit(ok))
+      .withColumn("manifest_ok", lit(true))
   }
 
   /** (vec_id, cell) via the literal-centroid argmin — the `ivf_topk`

@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PCA projection-model persistence — the fifth leg of the
@@ -23,74 +23,47 @@ import org.apache.spark.sql.functions._
   * Scale: artifact ∝ dim×K doubles (KBs at production dims), reload is
   * a model-bounded collect, the replayed projection is the standard
   * zero-shuffle literal chain. */
-object PcaModel {
+object PcaModel extends graft.sources.ModelCodec[EmbedPca.Model] {
 
-  def modelDir(dir: String): String =
-    graft.sources.ModelStore.modelDir("pca_model", dir)
-
-  private def fmtD(d: Double): String = java.lang.Double.toString(d)
+  val family = "pca_model"
+  val partDir = "parts"
 
   /** Part/index-keyed canonical checksum over mean, the K projection
     * columns, and the eigenvalues. */
   def modelSha(m: EmbedPca.Model): String = {
     val wCols = (0 until EmbedPca.K).map { k =>
-      s"w:$k:" + (0 until m.dim).map(i => fmtD(m.w(i)(k))).mkString(",")
+      s"w:$k:" + (0 until m.dim).map(i => m.w(i)(k)).mkString(",")
     }
-    val canon = (s"dim:${m.dim}" +:
-      s"mean:${m.mean.map(fmtD).mkString(",")}" +:
-      wCols :+ s"eig:${m.eig.map(fmtD).mkString(",")}").mkString(";")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    sha256Hex((s"dim:${m.dim}" +: s"mean:${m.mean.mkString(",")}" +:
+      wCols :+ s"eig:${m.eig.mkString(",")}").mkString(";"))
   }
 
-  def writeModel(s: SparkSession, path: String, m: EmbedPca.Model): Unit = {
+  def rows(s: SparkSession, m: EmbedPca.Model): DataFrame = {
     import s.implicits._
-    val rows =
-      Seq(("mean", 0, m.mean.toSeq)) ++
-        (0 until EmbedPca.K).map(k =>
-          ("w", k, (0 until m.dim).map(i => m.w(i)(k)))) ++
-        Seq(("eig", 0, m.eig.toSeq))
-    rows.toDF("part", "k", "v")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/parts")
+    (Seq(("mean", 0, m.mean.toSeq)) ++
+      (0 until EmbedPca.K).map(k =>
+        ("w", k, (0 until m.dim).map(i => m.w(i)(k)))) ++
+      Seq(("eig", 0, m.eig.toSeq))).toDF("part", "k", "v")
+  }
+
+  def manifest(s: SparkSession, m: EmbedPca.Model): DataFrame = {
+    import s.implicits._
     Seq((m.dim, EmbedPca.K, modelSha(m)))
       .toDF("dim", "n_components", "model_sha")
-      .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** Reload + verify. Returns (model, manifest_ok). */
-  def readModel(s: SparkSession, path: String): (EmbedPca.Model, Boolean) = {
-    val rows = s.read.parquet(s"$path/parts").collect()
+  /** Shaped by the stored manifest; a projection column of another
+    * length than `dim` fails the decode (its tail would escape the sha). */
+  def decode(parts: Array[Row], mf: Row): EmbedPca.Model = {
+    val byPart = parts
       .map(r => ((r.getString(0), r.getInt(1)), r.getSeq[Double](2).toArray))
       .toMap
-    val mf = s.read.parquet(s"$path/manifest").head()
     val dim = mf.getAs[Int]("dim")
     val kk = mf.getAs[Int]("n_components")
-    val mean = rows(("mean", 0))
-    val eig = rows(("eig", 0))
-    val w = Array.tabulate(dim, kk)((i, k) => rows(("w", k))(i))
-    val m = EmbedPca.Model(dim, mean, w, eig)
-    val ok = mf.getAs[String]("model_sha") == modelSha(m) &&
-      mean.length == dim && eig.length == kk &&
-      (0 until kk).forall(k => rows(("w", k)).length == dim)
-    (m, ok)
-  }
-
-  /** Newest committed, manifest-valid version (the IvfModel rollback
-    * discipline). */
-  def readLatestValid(s: SparkSession, base: String):
-      (Int, EmbedPca.Model, Boolean) = {
-    // the walk's predicate CAPTURES its read (the ChoiceModel pattern):
-    // the walk stops at the first valid version, so the last capture IS
-    // the winner — no second parquet parse of the model + manifest
-    var hit: Option[(EmbedPca.Model, Boolean)] = None
-    val (v, _) = graft.sources.ModelStore.latestValid(base, { p =>
-      val r = readModel(s, p)
-      if (r._2) hit = Some(r)
-      r._2
-    }).getOrElse(sys.error(s"no valid committed model under $base"))
-    val (m, ok) = hit.get
-    (v, m, ok)
+    require((0 until kk).forall(k => byPart(("w", k)).length == dim),
+      "projection column length differs from the manifest's dim")
+    val w = Array.tabulate(dim, kk)((i, k) => byPart(("w", k))(i))
+    EmbedPca.Model(dim, byPart(("mean", 0)), w, byPart(("eig", 0)))
   }
 
   /** Gate: train (memoized) → versioned write → reload latest valid →
@@ -98,9 +71,7 @@ object PcaModel {
     * trained one. */
   def pcaModelRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val trained = EmbedPca.model(s, dir)
-    val base = modelDir(dir)
-    graft.sources.ModelStore.write(base, p => writeModel(s, p, trained))
-    val (_, reloaded, ok) = readLatestValid(s, base)
+    val reloaded = roundtrip(s, dir, trained)
     synchronized {
       lastOracle = Some(
         s"""SELECT vec_id,
@@ -113,7 +84,7 @@ object PcaModel {
       .select(col("vec_id") +: EmbedPca.projectionCols(reloaded): _*)
       .withColumn("dim", lit(reloaded.dim.toLong))
       .withColumn("n_components", lit(EmbedPca.K.toLong))
-      .withColumn("manifest_ok", lit(ok))
+      .withColumn("manifest_ok", lit(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

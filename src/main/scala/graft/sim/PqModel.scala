@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PQ codebook persistence — the second leg of the model-artifact
@@ -17,72 +17,39 @@ import org.apache.spark.sql.functions._
   * is the big artifact, and its bytes are a pure function of this
   * codebook — which is why the codebook must be storage-stable first.
   */
-object PqModel {
+object PqModel extends graft.sources.ModelCodec[Array[Array[Array[Double]]]] {
 
-  def modelDir(dir: String): String =
-    graft.sources.ModelStore.modelDir("pq_model", dir)
-
-  /** Newest committed, manifest-valid version (the [[IvfModel]]
-    * rollback discipline). */
-  def readLatestValid(s: SparkSession, base: String):
-      (Int, Array[Array[Array[Double]]], Boolean) = {
-    // the walk's predicate CAPTURES its read (the ChoiceModel pattern):
-    // the walk stops at the first valid version, so the last capture IS
-    // the winner — no second parquet parse of codebook + manifest
-    var hit: Option[(Array[Array[Array[Double]]], Boolean)] = None
-    val (v, _) = graft.sources.ModelStore.latestValid(base, { p =>
-      val r = readModel(s, p)
-      if (r._2) hit = Some(r)
-      r._2
-    }).getOrElse(sys.error(s"no valid committed model under $base"))
-    val (cb, ok) = hit.get
-    (v, cb, ok)
-  }
+  val family = "pq_model"
+  val partDir = "codebook"
 
   /** Canonical codebook checksum: (m, k)-keyed shortest-round-trip
     * decimal serialization. */
-  def codebookSha(cb: Array[Array[Array[Double]]]): String = {
-    val canon = (for (m <- cb.indices; k <- cb(m).indices) yield
-      s"$m:$k:" + cb(m)(k).map(Ivf.fmtD).mkString(",")).mkString(";")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-  }
+  def codebookSha(cb: Array[Array[Array[Double]]]): String =
+    sha256Hex((for (m <- cb.indices; k <- cb(m).indices) yield
+      s"$m:$k:" + cb(m)(k).mkString(",")).mkString(";"))
 
-  def writeModel(s: SparkSession, path: String,
-                 cb: Array[Array[Array[Double]]]): Unit = {
+  def rows(s: SparkSession, cb: Array[Array[Array[Double]]]): DataFrame = {
     import s.implicits._
     (for (m <- cb.indices; k <- cb(m).indices)
       yield (m, k, cb(m)(k).toSeq)).toDF("m", "k", "c")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((cb.length, cb(0).length, cb(0)(0).length, codebookSha(cb)))
-      .toDF("m", "ks", "ds", "codebook_sha")
-      .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** Reload + verify. Returns (codebook, manifest_ok). */
-  def readModel(s: SparkSession, path: String):
-      (Array[Array[Array[Double]]], Boolean) = {
-    val rows = s.read.parquet(s"$path/codebook").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .sortBy(_._1)
-    val cb = rows.groupBy(_._1._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._1._2).map(_._2)).toArray
-    val mf = s.read.parquet(s"$path/manifest").head()
-    val ok = mf.getAs[String]("codebook_sha") == codebookSha(cb) &&
-      cb.length == mf.getAs[Int]("m") &&
-      cb.forall(_.length == mf.getAs[Int]("ks")) &&
-      cb.forall(_.forall(_.length == mf.getAs[Int]("ds")))
-    (cb, ok)
+  def manifest(s: SparkSession, cb: Array[Array[Array[Double]]]): DataFrame = {
+    import s.implicits._
+    Seq((cb.length, cb(0).length, cb(0)(0).length, codebookSha(cb)))
+      .toDF("m", "ks", "ds", "codebook_sha")
   }
+
+  def decode(parts: Array[Row], mf: Row): Array[Array[Array[Double]]] =
+    parts.map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
+      .groupBy(_._1._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._1._2).map(_._2)).toArray
 
   /** Gate: write → reload → verify → encode + ADC query from the
     * RELOADED codebook, oracled against the trained one. */
   def pqModelRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val (_, trained) = Pq.encoded(s, dir) // train (memoized)
-    val base = modelDir(dir)
-    graft.sources.ModelStore.write(base, p => writeModel(s, p, trained))
-    val (_, reloaded, ok) = readLatestValid(s, base)
+    val reloaded = roundtrip(s, dir, trained)
 
     // re-ENCODE the corpus and replay the query, reloaded-only
     val enc = Tables(s, dir, "embeddings")
@@ -102,7 +69,7 @@ object PqModel {
     Pq.adcQuery(enc, lut)
       .withColumn("m", lit(Pq.M.toLong))
       .withColumn("ks", lit(Pq.Ks.toLong))
-      .withColumn("manifest_ok", lit(ok))
+      .withColumn("manifest_ok", lit(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

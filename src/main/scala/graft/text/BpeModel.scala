@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-merge persistence — the third leg of the model-artifact
@@ -21,70 +21,40 @@ import org.apache.spark.sql.functions._
   * Scale: the artifact is ∝ vocabulary merges (a few 10⁴ rows in
   * production — KBs), the re-encode is the standard vocab-bounded
   * apply. */
-object BpeModel {
+object BpeModel extends graft.sources.ModelCodec[Seq[(String, String)]] {
 
-  def modelDir(dir: String): String =
-    graft.sources.ModelStore.modelDir("bpe_model", dir)
-
-  /** Newest committed, manifest-valid version (the
-    * [[graft.sim.IvfModel]] rollback discipline). */
-  def readLatestValid(s: SparkSession, base: String):
-      (Int, Seq[(String, String)], Boolean) = {
-    // the walk's predicate CAPTURES its read (the ChoiceModel pattern):
-    // the walk stops at the first valid version, so the last capture IS
-    // the winner — no second parquet parse of merges + manifest
-    var hit: Option[(Seq[(String, String)], Boolean)] = None
-    val (v, _) = graft.sources.ModelStore.latestValid(base, { p =>
-      val r = readModel(s, p)
-      if (r._2) hit = Some(r)
-      r._2
-    }).getOrElse(sys.error(s"no valid committed model under $base"))
-    val (merges, ok) = hit.get
-    (v, merges, ok)
-  }
+  val family = "bpe_model"
+  val partDir = "merges"
 
   /** Rank-keyed, length-prefixed canonical serialization (tokens may
     * contain any corpus byte, so delimiters alone cannot be trusted). */
-  def mergesSha(merges: Seq[(String, String)]): String = {
-    val canon = merges.zipWithIndex.map { case ((a, b), i) =>
+  def mergesSha(merges: Seq[(String, String)]): String =
+    sha256Hex(merges.zipWithIndex.map { case ((a, b), i) =>
       s"$i:${a.length}:$a:${b.length}:$b"
-    }.mkString(";")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes("UTF-8")).map(x => f"$x%02x").mkString
-  }
+    }.mkString(";"))
 
-  def writeModel(s: SparkSession, path: String,
-                 merges: Seq[(String, String)]): Unit = {
+  def rows(s: SparkSession, merges: Seq[(String, String)]): DataFrame = {
     import s.implicits._
     merges.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
       .toDF("rank", "a", "b")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/merges")
-    Seq((merges.size, mergesSha(merges)))
-      .toDF("k", "merges_sha")
-      .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** Reload + verify. Returns (ordered merges, manifest_ok). */
-  def readModel(s: SparkSession, path: String):
-      (Seq[(String, String)], Boolean) = {
-    val merges = s.read.parquet(s"$path/merges").collect()
-      .map(r => (r.getInt(0), (r.getString(1), r.getString(2))))
-      .sortBy(_._1).map(_._2).toSeq
-    val mf = s.read.parquet(s"$path/manifest").head()
-    val ok = mf.getAs[String]("merges_sha") == mergesSha(merges) &&
-      mf.getAs[Int]("k") == merges.size
-    (merges, ok)
+  def manifest(s: SparkSession, merges: Seq[(String, String)]): DataFrame = {
+    import s.implicits._
+    Seq((merges.size, mergesSha(merges))).toDF("k", "merges_sha")
   }
+
+  /** Merges in rank order. */
+  def decode(parts: Array[Row], mf: Row): Seq[(String, String)] =
+    parts.map(r => (r.getInt(0), (r.getString(1), r.getString(2))))
+      .sortBy(_._1).map(_._2).toSeq
 
   /** Gate: train → write → reload → verify → encode the corpus with
     * the RELOADED merge list, oracled against the trained one. */
   def bpeModelRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallel(s, dir, "documents")
     val trained = Bpe.trainedMerges(s, dir) // memoized, deterministic
-    val base = modelDir(dir)
-    graft.sources.ModelStore.write(base, p => writeModel(s, p, trained))
-    val (_, reloaded, ok) = readLatestValid(s, base)
+    val reloaded = roundtrip(s, dir, trained)
     synchronized {
       lastOracle = Some(
         s"""SELECT source, n_words, chars_before, tokens_after,
@@ -93,7 +63,7 @@ object BpeModel {
     }
     Bpe.encodeWith(docs, reloaded)
       .withColumn("k", lit(Bpe.KMerges.toLong))
-      .withColumn("manifest_ok", lit(ok))
+      .withColumn("manifest_ok", lit(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

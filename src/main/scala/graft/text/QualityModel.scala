@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Quality-classifier weight persistence — the fourth leg of the
@@ -24,71 +24,38 @@ import org.apache.spark.sql.functions._
   * Scale: the artifact is 6 doubles + a manifest row — the cheapest
   * possible ship-to-1000-executors payload; scoring is the standard
   * zero-shuffle literal projection. */
-object QualityModel {
+object QualityModel extends graft.sources.ModelCodec[Array[Double]] {
 
-  def modelDir(dir: String): String =
-    graft.sources.ModelStore.modelDir("quality_model", dir)
-
-  private def fmtD(d: Double): String = java.lang.Double.toString(d)
+  val family = "quality_model"
+  val partDir = "weights"
 
   /** Index-keyed shortest-round-trip decimal checksum — any corrupted
     * coefficient, reorder, or dropped row changes the string. */
-  def weightsSha(w: Array[Double]): String = {
-    val canon = w.zipWithIndex
-      .map { case (x, i) => s"$i:${fmtD(x)}" }.mkString(";")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  def weightsSha(w: Array[Double]): String =
+    sha256Hex(w.zipWithIndex.map { case (x, i) => s"$i:$x" }.mkString(";"))
+
+  def rows(s: SparkSession, w: Array[Double]): DataFrame = {
+    import s.implicits._
+    w.zipWithIndex.map { case (x, i) => (i, x) }.toSeq.toDF("i", "w")
   }
 
-  def writeModel(s: SparkSession, path: String, w: Array[Double]): Unit = {
+  def manifest(s: SparkSession, w: Array[Double]): DataFrame = {
     import s.implicits._
-    w.zipWithIndex.map { case (x, i) => (i, x) }.toSeq
-      .toDF("i", "w")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/weights")
     Seq((w.length, QualityClassifier.Lambda, QualityClassifier.Threshold,
         weightsSha(w)))
       .toDF("n_weights", "lambda", "threshold", "weights_sha")
-      .write.mode("overwrite").parquet(s"$path/manifest")
   }
 
-  /** Reload + verify. Returns (weights intercept-first, manifest_ok). */
-  def readModel(s: SparkSession, path: String): (Array[Double], Boolean) = {
-    val w = s.read.parquet(s"$path/weights").collect()
-      .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
-    val mf = s.read.parquet(s"$path/manifest").head()
-    val ok = mf.getAs[String]("weights_sha") == weightsSha(w) &&
-      mf.getAs[Int]("n_weights") == w.length &&
-      mf.getAs[Double]("lambda") == QualityClassifier.Lambda &&
-      mf.getAs[Double]("threshold") == QualityClassifier.Threshold
-    (w, ok)
-  }
-
-  /** Newest committed, manifest-valid version (the IvfModel rollback
-    * discipline). */
-  def readLatestValid(s: SparkSession, base: String):
-      (Int, Array[Double], Boolean) = {
-    // the walk's predicate CAPTURES its read (the ChoiceModel pattern):
-    // the walk stops at the first valid version, so the last capture IS
-    // the winner — no second parquet parse of weights + manifest
-    var hit: Option[(Array[Double], Boolean)] = None
-    val (v, _) = graft.sources.ModelStore.latestValid(base, { p =>
-      val r = readModel(s, p)
-      if (r._2) hit = Some(r)
-      r._2
-    }).getOrElse(sys.error(s"no valid committed model under $base"))
-    val (w, ok) = hit.get
-    (v, w, ok)
-  }
+  /** Weights, intercept first. */
+  def decode(parts: Array[Row], mf: Row): Array[Double] =
+    parts.map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
 
   /** Gate: train (memoized) → versioned write → reload latest valid →
     * re-score the corpus from the RELOADED weights, oracled against the
     * trained ones. */
   def qualityModelRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val trained = QualityClassifier.weights(s, dir)
-    val base = modelDir(dir)
-    graft.sources.ModelStore.write(base, p => writeModel(s, p, trained))
-    val (_, reloaded, ok) = readLatestValid(s, base)
+    val reloaded = roundtrip(s, dir, trained)
     synchronized {
       lastOracle = Some(
         s"""${QualityClassifier.scoredCtes(trained)}
@@ -99,7 +66,7 @@ object QualityModel {
     }
     QualityClassifier.scoreWith(Tables.parallel(s, dir, "documents"), reloaded)
       .withColumn("n_weights", lit(reloaded.length.toLong))
-      .withColumn("manifest_ok", lit(ok))
+      .withColumn("manifest_ok", lit(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -21,40 +21,37 @@ class ChoiceModelSpec extends AnyFunSuite {
   test("a dial version certified on a retrained quantizer is rejected; " +
     "re-certification serves again and the rollback window survives") {
     val base = tmpBase()
-    ModelStore.write(base,
-      p => ChoiceModel.writeModel(spark, p, dialsV1, "qsha-v1"))
+    ModelStore.write(base, p => ChoiceModel.writeModel(spark, p,
+      ChoiceDials(dialsV1, "qsha-v1")))
 
     // reload against the SAME quantizer: serves
-    val (_, got1, ok1) = ChoiceModel.readLatestValid(spark, base,
-      Some("qsha-v1"))
-    assert(ok1 && got1 == dialsV1.sortBy(_._1))
+    val (_, got1) = ChoiceModel.readLatestValid(spark, base, "qsha-v1")
+    assert(got1.rows == dialsV1.sortBy(_._1))
 
     // the quantizer retrains: NO committed version matches — fail loudly
     // instead of silently mis-probing the new index with old depths
     val e = intercept[RuntimeException] {
-      ChoiceModel.readLatestValid(spark, base, Some("qsha-v2"))
+      ChoiceModel.readLatestValid(spark, base, "qsha-v2")
     }
     assert(e.getMessage.contains("qsha-v2") &&
       e.getMessage.contains("re-run the certification"),
       s"the reload must name the missing quantizer binding: ${e.getMessage}")
 
     // re-certify against the new quantizer: the new version serves...
-    ModelStore.write(base,
-      p => ChoiceModel.writeModel(spark, p, dialsV2, "qsha-v2"))
-    val (v2, got2, ok2) = ChoiceModel.readLatestValid(spark, base,
-      Some("qsha-v2"))
-    assert(ok2 && got2 == dialsV2.sortBy(_._1))
+    ModelStore.write(base, p => ChoiceModel.writeModel(spark, p,
+      ChoiceDials(dialsV2, "qsha-v2")))
+    val (v2, got2) = ChoiceModel.readLatestValid(spark, base, "qsha-v2")
+    assert(got2.rows == dialsV2.sortBy(_._1))
 
     // ...and a fleet still pinned to the OLD quantizer skips the newer
     // version and keeps serving the one certified for it (the
     // ModelStore latestValid walk, applied to the staleness predicate)
-    val (v1, got1b, _) = ChoiceModel.readLatestValid(spark, base,
-      Some("qsha-v1"))
-    assert(v1 < v2 && got1b == dialsV1.sortBy(_._1),
+    val (v1, got1b) = ChoiceModel.readLatestValid(spark, base, "qsha-v1")
+    assert(v1 < v2 && got1b.rows == dialsV1.sortBy(_._1),
       "the older matching version must keep serving its quantizer")
 
     // an UNBOUND read (no expected sha) still takes the newest valid
-    val (_, gotAny, _) = ChoiceModel.readLatestValid(spark, base)
-    assert(gotAny == dialsV2.sortBy(_._1))
+    val (_, gotAny) = ChoiceModel.readLatestValid(spark, base)
+    assert(gotAny.rows == dialsV2.sortBy(_._1))
   }
 }

@@ -16,8 +16,10 @@ class IvfModelSpec extends AnyFunSuite {
     val (_, trained) = Ivf.assignments(spark, dir)
     val path = "target/ivf_model_spec/clean"
     IvfModel.writeModel(spark, path, trained)
-    val (reloaded, ok, nLists, dim) = IvfModel.readModel(spark, path)
+    val (reloaded, ok) = IvfModel.readModel(spark, path)
     assert(ok, "manifest must verify a clean artifact")
+    val mf = spark.read.parquet(s"$path/manifest").head()
+    val (nLists, dim) = (mf.getAs[Int]("n_lists"), mf.getAs[Int]("dim"))
     assert(nLists == trained.length && dim == trained(0).length)
     assert(reloaded.length == trained.length)
     trained.indices.foreach { j =>
@@ -65,7 +67,7 @@ class IvfModelSpec extends AnyFunSuite {
     c.repartition(1).write.mode("overwrite").parquet(s"$corrupt/centroids")
     spark.read.parquet(s"$clean/manifest")
       .write.mode("overwrite").parquet(s"$corrupt/manifest")
-    val (_, ok, _, _) = IvfModel.readModel(spark, corrupt)
+    val (_, ok) = IvfModel.readModel(spark, corrupt)
     assert(!ok, "a one-ulp-scale corruption must red the checksum")
     // and a shape corruption (dropped cell) reds it too
     val short = "target/ivf_model_spec/short"
@@ -73,7 +75,7 @@ class IvfModelSpec extends AnyFunSuite {
       .repartition(1).write.mode("overwrite").parquet(s"$short/centroids")
     spark.read.parquet(s"$clean/manifest")
       .write.mode("overwrite").parquet(s"$short/manifest")
-    val (_, ok2, _, _) = IvfModel.readModel(spark, short)
+    val (_, ok2) = IvfModel.readModel(spark, short)
     assert(!ok2, "a dropped cell must red the manifest")
   }
 }

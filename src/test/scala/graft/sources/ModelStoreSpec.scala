@@ -198,9 +198,8 @@ class ModelStoreSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$p/manifest")
     })
     assert(ModelStore.committedVersions(base) == Seq(1, 2))
-    val (v, centers, ok, _, _) = IvfModel.readLatestValid(spark, base)
+    val (v, centers) = IvfModel.readLatestValid(spark, base)
     assert(v == 1, "reader must roll back to the valid version")
-    assert(ok)
     assert(centers.map(_.toSeq).toSeq == good.map(_.toSeq).toSeq,
       "rolled-back coefficients must be bit-exact")
   }
@@ -257,9 +256,10 @@ class ModelStoreSpec extends AnyFunSuite {
       .createTempDirectory("graft-choicemodel").toString
     val rows = Seq(("de", 4L, 1.15, true), ("fr", 2L, 1.05, true),
       ("zh", 8L, 1.25, false))
-    ChoiceModel.writeModel(spark, dir, rows, "test-quantizer-sha")
+    ChoiceModel.writeModel(spark, dir,
+      graft.sim.ChoiceDials(rows, "test-quantizer-sha"))
     val (got, ok) = ChoiceModel.readModel(spark, dir)
-    assert(ok && got == rows.sortBy(_._1), "clean write must verify")
+    assert(ok && got.rows == rows.sortBy(_._1), "clean write must verify")
     // rewrite the dials with one deeper probe, manifest untouched
     import spark.implicits._
     val flipped = rows.updated(0, ("de", 8L, 1.15, true))

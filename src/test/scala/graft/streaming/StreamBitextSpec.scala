@@ -208,10 +208,9 @@ class StreamBitextSpec extends AnyFunSuite {
     // reject path; here the happy path must serve)
     val qsha = graft.sim.IvfModel.centroidSha(
       graft.sim.BitextMine.centersNow.get)
-    val (_, dialRows, ok) = graft.sim.ChoiceModel.readLatestValid(
-      spark, graft.sim.ChoiceModel.modelDir(dir), Some(qsha))
-    assert(ok, "the shipped artifact must be manifest-valid")
-    val dials = dialRows
+    val (_, shipped) = graft.sim.ChoiceModel.readLatestValid(
+      spark, graft.sim.ChoiceModel.modelDir(dir), qsha)
+    val dials = shipped.rows
       .toDF("tgt_lang", "chosen_probe", "chosen_threshold", "met_target")
       .localCheckpoint(true)
     val batchDocs = dv.filter(col("lang") === BitextMine.SrcLang &&
