@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.DataType
 
 /** One model-artifact family on top of the [[ModelStore]] version
   * protocol. A family states only what is its own:
@@ -55,7 +56,7 @@ trait ModelCodec[T] {
     (t, fields(stored) == fields(manifest(s, t).head()))
   }
 
-  private def fields(r: Row): Map[String, (Any, Any)] =
+  private def fields(r: Row): Map[String, (DataType, Any)] =
     r.schema.fields.zipWithIndex
       .map { case (f, i) => f.name -> (f.dataType, r.get(i)) }.toMap
 
@@ -71,6 +72,8 @@ trait ModelCodec[T] {
     }).map { case (v, _) => (v, hit.get) }
   }
 
+  /** Newest committed valid version that `accept` takes; fails when
+    * there is none. */
   def readLatestValid(s: SparkSession, base: String,
                       accept: T => Boolean = (_: T) => true): (Int, T) =
     findLatestValid(s, base, accept)
