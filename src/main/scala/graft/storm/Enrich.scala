@@ -92,9 +92,10 @@ object Enrich {
       GoFormat.go_fmt_f(lon, 4),
       coalesce(timeStr, lit("")),
       GoFormat.go_fmt_g(magnitude))
-    val short = substring(sha2(input, 256), 1, 16)
-    when(coalesce(eventType, lit("")) === "", short)
-      .otherwise(concat(eventType, lit("-"), short))
+    // prefix + one hash, so the hash is generated once, not in each branch
+    val prefix = when(coalesce(eventType, lit("")) =!= "", concat(eventType, lit("-")))
+      .otherwise(lit(""))
+    concat(prefix, substring(sha2(input, 256), 1, 16))
   }
 
   // ---------------------------------------------------------------- P7
@@ -186,46 +187,51 @@ object Enrich {
   def timeBucket(eventTime: Column): Column = date_trunc("hour", eventTime)
 
   // ---------------------------------------------------------------- P15
-  /** Full parse + enrichment over a DataFrame of raw collector records.
-    *
-    * Input: the 11 raw string columns (`Model.rawFieldNames`) plus a
-    * timestamp column (default `kafka_timestamp`) providing the base date
-    * for HHMM expansion. Output: flat enriched columns (nest with
-    * [[nested]] for the wire format). `processedAt` is injectable for
-    * deterministic tests, mirroring the reference's swappable clock
-    * (`internal/domain/clock.go:7-16`).
-    */
-  def enrich(raw: DataFrame,
-             kafkaTsCol: String = "kafka_timestamp",
-             processedAt: Column = current_timestamp(),
-             keep: Seq[String] = Nil): DataFrame = {
-    // All time semantics (hourly UTC buckets, HHMM base dates) follow the
-    // session time zone; anything but UTC silently diverges from the
-    // reference, so fail fast instead (`transform.go:108-111,314`).
-    val tz = raw.sparkSession.conf.get("spark.sql.session.timeZone")
+  // All time semantics (hourly UTC buckets, HHMM base dates) follow the
+  // session time zone; anything but UTC silently diverges from the
+  // reference, so fail fast instead (`transform.go:108-111,314`).
+  private def requireUtc(df: DataFrame): Unit = {
+    val tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
     require(tz == "UTC" || tz == "Etc/UTC" || tz == "Z",
       s"enrich() requires spark.sql.session.timeZone=UTC (got $tz): " +
         "hour buckets and HHMM base dates are defined in UTC")
-    // Staged projections, not one flat select: the expensive parses
-    // (eventTime: 2 timestamp patterns + HHMM; magnitude: trim/regex/cast)
-    // feed multiple downstream columns, and Catalyst's CollapseProject keeps
-    // a projection boundary when a non-cheap expression is referenced more
-    // than once — so each parse runs once per row instead of once per use.
-    val kts = col(kafkaTsCol)
-    val staged = raw.select(
-      raw.columns.map(col) ++ Seq(
+  }
+
+  /** Raw columns [[finish]] reads besides the ones [[stage]] parses. */
+  private val finishRawCols = Seq("State", "County", "Location", "Comments")
+
+  /** The parses of [[enrich]]: magnitude, event time, lat/lon, event type,
+    * unit and normalized magnitude, as `_`-prefixed columns next to `keep`
+    * and the raw columns [[finish]] reads. Input as for [[enrich]].
+    *
+    * Staged projections, not one flat select: the expensive parses
+    * (eventTime: 2 timestamp patterns + HHMM; magnitude: trim/regex/cast)
+    * feed multiple downstream columns, and Catalyst's CollapseProject keeps
+    * a projection boundary when a non-cheap expression is referenced more
+    * than once — so each parse runs once per row instead of once per use. */
+  def stage(raw: DataFrame, kafkaTsCol: String = "kafka_timestamp",
+            keep: Seq[String] = Nil): DataFrame = {
+    requireUtc(raw)
+    raw.select(
+      (keep ++ finishRawCols).distinct.map(col) ++ Seq(
         coalesce(col("EventType"), lit("")).as("_raw_type"),
         coalesce(col("Time"), lit("")).as("_time_str"),
         magnitude(coalesce(col("EventType"), lit("")), col("Size"),
           col("F_Scale"), col("Speed")).as("_mag_parsed"),
-        eventTime(kts, coalesce(col("Time"), lit(""))).as("_et"),
+        eventTime(col(kafkaTsCol), coalesce(col("Time"), lit(""))).as("_et"),
         floatOrZero(col("Lat")).as("_lat"),
         floatOrZero(col("Lon")).as("_lon")): _*)
       .withColumn("_ev_type", normalizeEventType(col("_raw_type")))
       .withColumn("_unit", normalizeUnit(col("_ev_type"), lit("")))
       .withColumn("_mag_norm",
         normalizeMagnitude(col("_ev_type"), col("_mag_parsed"), col("_unit")))
+  }
 
+  /** The rest of [[enrich]] over the output of [[stage]]: id, severity,
+    * location, source office, time bucket and `processed_at`, after `keep`. */
+  def finish(staged: DataFrame, processedAt: Column = current_timestamp(),
+             keep: Seq[String] = Nil): DataFrame = {
+    requireUtc(staged)
     staged.select(
       keep.map(col) ++ Seq(
         generateId(col("_raw_type"), coalesce(col("State"), lit("")),
@@ -249,6 +255,23 @@ object Enrich {
         timeBucket(col("_et")).as("time_bucket"),
         processedAt.as("processed_at")): _*)
   }
+
+  /** Full parse + enrichment over a DataFrame of raw collector records:
+    * `finish(stage(raw))`.
+    *
+    * Input: the 11 raw string columns (`Model.rawFieldNames`) plus a
+    * timestamp column (default `kafka_timestamp`) providing the base date
+    * for HHMM expansion. Output: `keep`, then the flat enriched columns
+    * (nest with [[nested]] for the wire format). `processedAt` is
+    * injectable for deterministic tests, mirroring the reference's
+    * swappable clock (`internal/domain/clock.go:7-16`); it and `keep` may
+    * read any input column.
+    */
+  def enrich(raw: DataFrame,
+             kafkaTsCol: String = "kafka_timestamp",
+             processedAt: Column = current_timestamp(),
+             keep: Seq[String] = Nil): DataFrame =
+    finish(stage(raw, kafkaTsCol, keep = raw.columns.toSeq), processedAt, keep)
 
   // ---------------------------------------------------------------- P1
   /** Parse the Kafka envelope's JSON value into the 11 raw string columns.
@@ -278,12 +301,15 @@ object Enrich {
     * malformed input (not a null struct), so malformed detection needs the
     * corrupt-record column. A legit "{}" parses clean with all-null fields —
     * the reference treats that as a valid zero-value event
-    * (transform_test.go:96-103), and so does this path.
+    * (transform_test.go:96-103), and so does this path. `extra` columns
+    * are computed in the same projection as from_json and passed through.
     */
   def parseRawJson(df: DataFrame, valueCol: String = "value",
                    kafkaTsCol: String = "timestamp",
-                   keep: Seq[String] = Nil): DataFrame = {
-    val parsed = df.withColumn("_rec", parsedWithCorrupt(col(valueCol)))
+                   keep: Seq[String] = Nil,
+                   extra: Seq[Column] = Nil): DataFrame = {
+    val parsed = df.select(
+      (col("*") +: parsedWithCorrupt(col(valueCol)).as("_rec") +: extra): _*)
     val rawCols = Model.rawFieldNames.map(f => col(s"_rec.$f").as(f))
     parsed.select(
       keep.map(col) ++ rawCols ++ Seq(

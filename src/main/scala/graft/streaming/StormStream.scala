@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.storm.Enrich
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -150,12 +150,27 @@ object StormStream {
       }
       .load()
 
+  /** Envelope column carrying the micro-batch timestamp into the
+    * enrichment (see [[runWithForeachBatch]]); never written to a sink. */
+  private[graft] val BatchTsCol = "_processed_at"
+
   /** P1 + P2–P15 over the raw envelope (columns `value` binary/string,
     * `timestamp`): parse, flag parse errors, enrich the good rows. Output
-    * columns: the enriched flat set + `parse_error`. */
-  def transform(envelope: DataFrame): DataFrame = {
-    val parsed = Enrich.parseRawJson(envelope)
-    Enrich.enrich(parsed, keep = Seq("parse_error"))
+    * columns: `parse_error` + the enriched flat set.
+    *
+    * `processed_at` is computed next to the JSON parse and read by the
+    * enrichment as a column, as in [[runWithForeachBatch]]. Inside a
+    * streaming query Spark rewrites `current_timestamp()` to the
+    * micro-batch timestamp and inlines it as a literal into that
+    * projection, which runs outside whole-stage codegen (from_json has no
+    * generated code), so the Enrich stage's code is the same in every batch
+    * and compiles once. There it also keeps a filter on `parse_error` from
+    * being pushed below the parse, which would parse every value twice. */
+  def transform(envelope: DataFrame,
+                processedAt: Column = current_timestamp()): DataFrame = {
+    val parsed = Enrich.parseRawJson(envelope, keep = Seq(BatchTsCol),
+      extra = Seq(processedAt.as(BatchTsCol)))
+    Enrich.enrich(parsed, processedAt = col(BatchTsCol), keep = Seq("parse_error"))
   }
 
   /** S4: nested wire-format output — key = id bytes, value = nested JSON
@@ -173,10 +188,6 @@ object StormStream {
           encode(date_format(col("processed_at"), "yyyy-MM-dd'T'HH:mm:ssXXX"),
             "UTF-8").as("value"))).as("headers"))
   }
-
-  /** Envelope column carrying the micro-batch timestamp into the batch
-    * function (see [[runWithForeachBatch]]); never written to a sink. */
-  private val BatchTsCol = "_processed_at"
 
   /** F1: split one micro-batch into (good wire records, poison ORIGINAL
     * envelope rows) and write each side — offsets advance regardless
@@ -206,45 +217,59 @@ object StormStream {
     queryName.foreach(writer.queryName)
     writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE parse per micro-batch: the envelope columns ride through the
-        // parse + enrichment (`keep`), so the poison split filters the SAME
-        // cached `parse_error` column the good side reads — no second
-        // from_json over the raw value — and the dead-letter rows are the
-        // ORIGINAL envelope columns reconstructed from the cached frame.
-        // `transform` stays the stream ≡ batch contract; this inlines it
-        // with the envelope passthrough (parseErrorFlag remains the shared
-        // flag DEFINITION — parseRawJson computes the identical expression
-        // over the identical parse).
-        val envCols = batch.columns.toSeq.filterNot(_ == BatchTsCol)
-        val t = Enrich.enrich(
-          Enrich.parseRawJson(batch, keep = envCols :+ BatchTsCol),
-          processedAt = col(BatchTsCol),
-          keep = "parse_error" +: envCols).cache()
-        try {
-          // one job counts both sides and materializes the cache
-          val counts = t.agg(
-            count(when(!col("parse_error"), 1)),
-            count(when(col("parse_error"), 1))).head()
-          val (nGood, nPoison) = (counts.getLong(0), counts.getLong(1))
-          writeGood(toWire(t.filter(!col("parse_error"))))
-          // produced/error counters mirror the reference's
-          // messages_produced_total / transform_errors_total
-          metrics.foreach { m =>
-            m.messagesProduced.addAndGet(nGood)
-            m.transformErrors.addAndGet(nPoison)
-          }
-          if (nPoison > 0) {
-            val poison = t.filter(col("parse_error"))
-              .select(envCols.map(col): _*)
-            poisonLogLines(poison).foreach(log.warn)
-            if (nPoison > MaxPoisonLogLines)
-              log.warn(s"suppressed ${nPoison - MaxPoisonLogLines} further " +
-                "poison provenance lines this batch")
-            writePoison(poison)
-          }
-        } finally { t.unpersist(); () }
+        processBatch(batch, writeGood, writePoison, metrics)
       }
       .start()
+  }
+
+  /** The batch function of [[runWithForeachBatch]]: `batch` is the
+    * envelope plus the [[BatchTsCol]] column.
+    *
+    * ONE parse per micro-batch: the envelope columns ride through the parse
+    * and [[Enrich.stage]] (`keep`), so the poison split filters the SAME
+    * cached `parse_error` column the good side reads — no second from_json
+    * over the raw value — and the dead-letter rows are the ORIGINAL
+    * envelope columns read back from the cached frame.
+    *
+    * The cache sits between [[Enrich.stage]] and [[Enrich.finish]]: the
+    * parses fill it, and `finish` runs in the good side's wire job. Fused,
+    * parse and enrichment generate one method past HotSpot's 8,000-byte
+    * limit for JIT compilation, so every record ran in the bytecode
+    * interpreter; split at the cache, each stage's methods stay under it,
+    * with no extra job. `enrich = finish ∘ stage`, so the values are those
+    * of [[transform]]. */
+  private[graft] def processBatch(batch: DataFrame,
+                                  writeGood: DataFrame => Unit,
+                                  writePoison: DataFrame => Unit,
+                                  metrics: Option[Metrics]): Unit = {
+    val envCols = batch.columns.toSeq.filterNot(_ == BatchTsCol)
+    val staged = Enrich.stage(
+      Enrich.parseRawJson(batch, keep = envCols :+ BatchTsCol),
+      keep = ("parse_error" +: envCols) :+ BatchTsCol).cache()
+    try {
+      // one job counts both sides and materializes the cache
+      val counts = staged.agg(
+        count(when(!col("parse_error"), 1)),
+        count(when(col("parse_error"), 1))).head()
+      val (nGood, nPoison) = (counts.getLong(0), counts.getLong(1))
+      writeGood(toWire(Enrich.finish(staged.filter(!col("parse_error")),
+        processedAt = col(BatchTsCol))))
+      // produced/error counters mirror the reference's
+      // messages_produced_total / transform_errors_total
+      metrics.foreach { m =>
+        m.messagesProduced.addAndGet(nGood)
+        m.transformErrors.addAndGet(nPoison)
+      }
+      if (nPoison > 0) {
+        val poison = staged.filter(col("parse_error"))
+          .select(envCols.map(col): _*)
+        poisonLogLines(poison).foreach(log.warn)
+        if (nPoison > MaxPoisonLogLines)
+          log.warn(s"suppressed ${nPoison - MaxPoisonLogLines} further " +
+            "poison provenance lines this batch")
+        writePoison(poison)
+      }
+    } finally { staged.unpersist(); () }
   }
 
   /** Full Kafka→Kafka wiring (deploy-time path; needs the connector jar):

@@ -1,10 +1,15 @@
 package graft.storm
 
 import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
 
 import graft.SparkTestSession
-import org.apache.spark.sql.{Column, Row}
+import graft.streaming.StormStream
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit tables mirroring the reference's transform_test.go (see SURVEY.md §5
@@ -140,23 +145,108 @@ class EnrichSpec extends AnyFunSuite {
     assert(fractions.filter(parsed) == fractions.take(18))
   }
 
-  test("the fused enrich method does not grow past its measured bytecode size") {
-    // HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
-    // (DontCompileHugeMethods is on by default), so the fused Enrich method
-    // already runs interpreted; the guard is its measured size, so it does
-    // not grow further past that limit unnoticed.
-    val maxEnrichMethodBytes = 8889
-    val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("""{"Time":"1510"}""")), 1),
-      new org.apache.spark.sql.types.StructType().add("value", "string"))
-      .withColumn("timestamp", to_timestamp(lit("2024-04-26 00:00:00")))
-    val plan = Enrich.enrich(Enrich.parseRawJson(raw), keep = Seq("parse_error"))
-      .queryExecution.executedPlan
-    val maxMethod = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+  // -------------------------------------------------- generated method sizes
+  // HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
+  // (DontCompileHugeMethods is on by default): such a method runs in the
+  // bytecode interpreter for every record.
+  private val HugeMethodBytes = 8000
+
+  private def maxMethodBytes(plan: SparkPlan): Int =
+    org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
       .map(_._3.maxMethodCodeSize).max
-    assert(maxMethod <= maxEnrichMethodBytes,
-      s"largest generated Enrich method is $maxMethod bytes " +
-        s"(guard $maxEnrichMethodBytes)")
+
+  /** A micro-batch as `runWithForeachBatch`'s batch function receives it
+    * from a file source: the `value` line, the envelope `timestamp` and
+    * the micro-batch timestamp column, all read from an RDD (a file
+    * source's projection runs before the batch function's plan). */
+  private val kafkaTs = Timestamp.valueOf("2024-04-26 00:00:00")
+  private val processedAt = Timestamp.valueOf("2024-04-27 06:00:00")
+
+  private def fileBatch(lines: Seq[String]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(lines.map(Row(_, kafkaTs, processedAt)), 2),
+      new StructType().add("value", "string").add("timestamp", "timestamp")
+        .add(StormStream.BatchTsCol, "timestamp"))
+
+  private val goodLine =
+    """{"Time":"1510","Size":"125","Location":"8 ESE Chappel","County":"San Saba",""" +
+      """"State":"TX","Lat":"31.02","Lon":"-98.44",""" +
+      """"Comments":"1.25 inch hail reported. (SJT)","EventType":"hail"}"""
+
+  /** The executed plans of what the batch function hands its two sinks,
+    * and of the cached stage both sides read. */
+  private def streamBodyPlans(batch: DataFrame): Map[String, SparkPlan] = {
+    var plans = Map.empty[String, SparkPlan]
+    StormStream.processBatch(batch,
+      g => {
+        val wire = g.queryExecution.executedPlan
+        plans += "wire" -> wire
+        wire.collectFirst { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+          .foreach(c => plans += "cached stage" -> c)
+      },
+      p => plans += "dead letter" -> p.queryExecution.executedPlan,
+      metrics = None)
+    plans
+  }
+
+  test("every generated method of the stream body is under the JIT limit") {
+    val plans = streamBodyPlans(fileBatch(Seq(goodLine, "{not json")))
+    assert(plans.keySet == Set("wire", "cached stage", "dead letter"))
+    val sizes = plans.map { case (name, plan) => name -> maxMethodBytes(plan) }
+    val huge = sizes.filter(_._2 >= HugeMethodBytes)
+    assert(huge.isEmpty, s"generated methods at or over $HugeMethodBytes bytes: $huge")
+  }
+
+  test("the fused enrich method does not grow past its measured bytecode size") {
+    // `transform` fuses parse and enrichment into one stage, so its largest
+    // method is past the JIT limit; the guard is its measured size, so it
+    // does not grow further unnoticed
+    val maxFusedBytes = 8938
+    val env = fileBatch(Seq(goodLine)).drop(StormStream.BatchTsCol)
+    val fused = maxMethodBytes(StormStream.transform(env).queryExecution.executedPlan)
+    assert(fused <= maxFusedBytes,
+      s"largest generated method of transform is $fused bytes (guard $maxFusedBytes)")
+  }
+
+  test("the split stream body equals the fused transform, record for record") {
+    // golden record, then generated HHMM / RFC 3339 / UNK / legacy-hail
+    // records and malformed lines
+    val types = Seq("hail", "tornado", "wind", "", "gust")
+    val times = Seq("1510", "130", "2567", "", "2024-04-26T15:33:00Z",
+      "2024-04-26T15:33:00.25-05:00")
+    val mags = Seq("125", "1.75", "EF2", "F1", "UNK", "unk", "65", "", "9.5")
+    val generated = for (i <- 0 until 60) yield {
+      val (t, tm, m) = (types(i % 5), times(i % 6), mags(i % 9))
+      s"""{"EventType":"$t","Time":"$tm","Size":"$m","F_Scale":"$m",""" +
+        s""""Speed":"$m","State":"${if (i % 7 == 0) "" else "TX"}",""" +
+        s""""Lat":"${30 + i * 0.37}","Lon":"-${97 + i * 0.11}",""" +
+        s""""Location":"${i % 4} NE Town$i","County":"C$i",""" +
+        s""""Comments":"report $i (${if (i % 3 == 0) "OUN" else "oun"})"}"""
+    }
+    val malformed = Seq("{not json", "also-bad", """{"EventType":"hail",""")
+    val lines = (goodLine +: generated) ++ malformed
+    val batch = fileBatch(lines)
+
+    def wireRows(df: DataFrame): Seq[(Seq[Byte], String, Seq[(String, Seq[Byte])])] =
+      df.collect().toSeq.map(r => (r.getAs[Array[Byte]]("key").toSeq,
+        r.getAs[String]("value"),
+        r.getSeq[Row](2).map(h => (h.getString(0), h.getAs[Array[Byte]](1).toSeq))))
+        .sortBy(_._2)
+    var good = Seq.empty[(Seq[Byte], String, Seq[(String, Seq[Byte])])]
+    var poison = Seq.empty[Row]
+    StormStream.processBatch(batch, g => good = wireRows(g),
+      p => poison = p.collect().toSeq, metrics = None)
+
+    val envelope = batch.drop(StormStream.BatchTsCol)
+    val fused = wireRows(StormStream.toWire(
+      StormStream.transform(envelope, processedAt = lit(processedAt))
+        .filter(!col("parse_error"))))
+    assert(good.size == lines.size - malformed.size)
+    assert(good == fused)
+    assert(good.exists(_._2.contains("\"id\":\"hail-5d91dda0f56ba124\"")))
+    assert(poison.map(r => (r.getString(0), r.getTimestamp(1))).toSet ==
+      malformed.map(_ -> kafkaTs).toSet)
+    assert(poison.head.schema.fieldNames.toSeq == Seq("value", "timestamp"))
   }
 
   // -------------------------------------------------- office + location

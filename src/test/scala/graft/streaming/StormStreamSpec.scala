@@ -6,6 +6,7 @@ import graft.SparkTestSession
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming-semantics tests with MemoryStream (SURVEY.md §5 tier 3): the
@@ -105,17 +106,16 @@ class StormStreamSpec extends AnyFunSuite {
     seen.toArray(Array.empty[String]).toSeq.map(_.trim)
   }
 
-  test("Enrich compiles once: later micro-batches compile only the source stage") {
+  /** Feeds four micro-batches of one good and one bad record through the
+    * query `start` builds over a MemoryStream envelope, and hands `check`
+    * each batch's number, the query and the classes it compiled. */
+  private def compilesPerBatch(start: DataFrame => StreamingQuery)(
+      check: (Int, StreamingQuery, Seq[String]) => Unit): Unit = {
     import org.apache.spark.metrics.source.CodegenMetrics
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val env = mem.toDF()
-      .withColumn("timestamp", to_timestamp(lit("2024-04-26 00:00:00")))
-    val q = StormStream.runWithForeachBatch(env,
-      StormStream.Config(checkpointDir =
-        java.nio.file.Files.createTempDirectory("ckpt-codegen").toString,
-        flushInterval = "0 milliseconds"),
-      g => g.collect(), p => p.collect())
+    val q = start(mem.toDF()
+      .withColumn("timestamp", to_timestamp(lit("2024-04-26 00:00:00"))))
     def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       for (i <- 1 to 4) {
@@ -126,20 +126,50 @@ class StormStreamSpec extends AnyFunSuite {
         }
         assert(compilations - before == compiled.size,
           s"batch $i: the log missed a compilation")
-        if (i > 1) {
-          // The micro-batch timestamp is a literal in the streaming source
-          // projection, so that stage compiles anew every batch (once on the
-          // driver, once for the task threads' class loader). Everything the
-          // batch function runs over it — parse, Enrich, the count, the
-          // wire projection, the sinks — must hit the codegen cache.
-          val source = org.apache.spark.sql.execution.debug
-            .codegenStringSeq(q).map(_._2.trim).toSet
-          val other = compiled.filterNot(source)
-          assert(other.isEmpty, s"batch $i compiled ${other.size} class(es) " +
-            s"besides the source stage:\n${other.map(_.take(600)).mkString("\n---\n")}")
-        }
+        check(i, q, compiled)
       }
     } finally q.stop()
+  }
+
+  /** Java source of each whole-stage-codegen class of the query's last
+    * micro-batch (not of what a foreachBatch function runs over it). */
+  private def wholeStages(q: StreamingQuery): Set[String] =
+    org.apache.spark.sql.execution.debug.codegenStringSeq(q).map(_._2.trim).toSet
+
+  test("Enrich compiles once: later micro-batches compile only the source stage") {
+    compilesPerBatch(env => StormStream.runWithForeachBatch(env,
+      StormStream.Config(checkpointDir =
+        java.nio.file.Files.createTempDirectory("ckpt-codegen").toString,
+        flushInterval = "0 milliseconds"),
+      g => g.collect(), p => p.collect())) { (i, q, compiled) =>
+      if (i > 1) {
+        // The micro-batch timestamp is a literal in the streaming source
+        // projection, so that stage compiles anew every batch (once on the
+        // driver, once for the task threads' class loader). Everything the
+        // batch function runs over it — parse, Enrich, the count, the
+        // wire projection, the sinks — must hit the codegen cache.
+        val other = compiled.filterNot(wholeStages(q))
+        assert(other.isEmpty, s"batch $i compiled ${other.size} class(es) " +
+          s"besides the source stage:\n${other.map(_.take(600)).mkString("\n---\n")}")
+      }
+    }
+  }
+
+  test("transform in a streaming query compiles its Enrich stage once") {
+    // Spark evaluates the parse's projection outside whole-stage codegen
+    // (from_json has no generated code), and the micro-batch timestamp
+    // literal lands there; the whole-stage class that holds Enrich reads
+    // `processed_at` as a column, so its source is the same in every batch.
+    compilesPerBatch(env => StormStream.transform(env).writeStream
+      .format("noop")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ckpt-transform").toString)
+      .start()) { (i, q, compiled) =>
+      val enrichStages = compiled.filter(wholeStages(q))
+      if (i == 1) assert(enrichStages.nonEmpty, "batch 1 compiled no Enrich stage")
+      else assert(enrichStages.isEmpty,
+        s"batch $i compiled the Enrich stage ${enrichStages.size} time(s) again")
+    }
   }
 
   test("a batch replayed after a restart is byte-identical on the wire (T2)") {
