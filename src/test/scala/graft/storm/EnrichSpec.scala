@@ -155,13 +155,13 @@ class EnrichSpec extends AnyFunSuite {
     org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
       .map(_._3.maxMethodCodeSize).max
 
+  private val kafkaTs = Timestamp.valueOf("2024-04-26 00:00:00")
+  private val processedAt = Timestamp.valueOf("2024-04-27 06:00:00")
+
   /** A micro-batch as `runWithForeachBatch`'s batch function receives it
     * from a file source: the `value` line, the envelope `timestamp` and
     * the micro-batch timestamp column, all read from an RDD (a file
     * source's projection runs before the batch function's plan). */
-  private val kafkaTs = Timestamp.valueOf("2024-04-26 00:00:00")
-  private val processedAt = Timestamp.valueOf("2024-04-27 06:00:00")
-
   private def fileBatch(lines: Seq[String]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.parallelize(lines.map(Row(_, kafkaTs, processedAt)), 2),
