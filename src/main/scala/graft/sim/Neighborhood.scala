@@ -31,6 +31,8 @@ import org.apache.spark.sql.functions._
   */
 object Neighborhood {
 
+  /** ANF keeps every round's sketch checkpoint until its one final action,
+    * so peak storage grows with the radius (fine at 3). */
   val MaxRadius = 3
   /** ANF sketches per node (k): rsd ≈ 0.78/√k ≈ 0.0975. */
   val NumSketches = 64

@@ -4,7 +4,10 @@ import graft.storm.Enrich
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.DataType
 
 /** The streaming ETL pipeline (reference `cmd/etl` + `internal/pipeline`,
   * SURVEY.md §3.1): Kafka/raw envelope in → JSON parse → enrichment →
@@ -38,14 +41,16 @@ object StormStream {
     * provenance columns present on the frame are included, so the same path
     * serves Kafka envelopes and provenance-free test streams. */
   def poisonLogLines(poison: DataFrame,
-                     limit: Int = MaxPoisonLogLines): Seq[String] = {
-    val prov = Seq("topic", "partition", "offset")
-      .filter(poison.columns.contains)
-    poison.select(prov.map(col): _*).limit(limit).collect().toSeq.map { r =>
-      val fields = prov.map(c => s"$c=${r.getAs[Any](c)}")
-      ("transform failed, skipping message" +: fields).mkString(" ")
-    }
-  }
+                     limit: Int = MaxPoisonLogLines): Seq[String] =
+    poison.select(poisonLine(poison.columns.toSeq)).limit(limit).collect()
+      .toSeq.map(_.getString(0))
+
+  /** The warn line of [[poisonLogLines]] as a column over a frame with
+    * the columns `cols`. */
+  private def poisonLine(cols: Seq[String]): Column =
+    concat_ws(" ", lit("transform failed, skipping message") +:
+      Seq("topic", "partition", "offset").filter(cols.contains).map(c =>
+        concat(lit(s"$c="), coalesce(col(c).cast("string"), lit("null")))): _*)
 
   /** Batch knobs of the reference (`BATCH_SIZE`, `BATCH_FLUSH_INTERVAL`,
     * README.md:55-56) mapped to micro-batch knobs. */
@@ -150,28 +155,52 @@ object StormStream {
       }
       .load()
 
-  /** Envelope column carrying the micro-batch timestamp into the
-    * enrichment (see [[runWithForeachBatch]]); never written to a sink. */
+  /** Column carrying the micro-batch timestamp from the parse to the
+    * enrichment (see [[staged]]); never written to a sink. */
   private[graft] val BatchTsCol = "_processed_at"
 
-  /** P1 + P2–P15 over the raw envelope (columns `value` binary/string,
-    * `timestamp`): parse, flag parse errors, enrich the good rows. Output
-    * columns: `parse_error` + the enriched flat set.
+  /** P1 + the parses of [[Enrich.stage]] over the raw envelope (columns
+    * `value` binary/string, `timestamp`): the streaming half of the
+    * pipeline, which [[runWithForeachBatch]] hands to `writeStream` so
+    * Spark analyses it once per query. Columns: `parse_error`, the
+    * envelope's own, [[BatchTsCol]], then the stage's; [[processBatch]]
+    * relies on that order.
     *
-    * `processed_at` is computed next to the JSON parse and read by the
-    * enrichment as a column, as in [[runWithForeachBatch]]. Inside a
-    * streaming query Spark rewrites `current_timestamp()` to the
-    * micro-batch timestamp and inlines it as a literal into that
-    * projection, which runs outside whole-stage codegen (from_json has no
-    * generated code), so the Enrich stage's code is the same in every batch
-    * and compiles once. There it also keeps a filter on `parse_error` from
-    * being pushed below the parse, which would parse every value twice. */
-  def transform(envelope: DataFrame,
-                processedAt: Column = current_timestamp()): DataFrame = {
-    val parsed = Enrich.parseRawJson(envelope, keep = Seq(BatchTsCol),
-      extra = Seq(processedAt.as(BatchTsCol)))
-    Enrich.enrich(parsed, processedAt = col(BatchTsCol), keep = Seq("parse_error"))
+    * `processedAt` is computed next to the JSON parse. Inside a streaming
+    * query Spark rewrites `current_timestamp()` to the micro-batch
+    * timestamp recorded in the offset log, so every record of a batch
+    * carries the same value and a replayed batch is byte-identical. After
+    * optimisation it becomes a literal, and a literal's generated code
+    * carries its value, so each batch would compile a new class;
+    * [[BatchTimestamp]] evaluates it through an object reference instead,
+    * and no class compiles after the first batch. That projection runs
+    * outside whole-stage codegen anyway (from_json has no generated code),
+    * and the nondeterministic timestamp keeps a filter on `parse_error`
+    * from being pushed below the parse, which would parse every value
+    * twice. */
+  def staged(envelope: DataFrame,
+             processedAt: Column = current_timestamp()): DataFrame =
+    staged(envelope, processedAt, envelope.columns.toSeq)
+
+  /** [[staged]] carrying the envelope columns `envCols` only. */
+  private def staged(envelope: DataFrame, processedAt: Column,
+                     envCols: Seq[String]): DataFrame = {
+    val ts = ColumnBridge.column(BatchTimestamp(ColumnBridge.expression(processedAt)))
+    Enrich.stage(
+      Enrich.parseRawJson(envelope, keep = envCols :+ BatchTsCol,
+        extra = Seq(ts.as(BatchTsCol))),
+      keep = ("parse_error" +: envCols) :+ BatchTsCol)
   }
+
+  /** P1 + P2–P15 over the raw envelope: parse, flag parse errors, enrich
+    * the good rows — `Enrich.finish` over [[staged]], the same code the
+    * stream runs. Output columns: `parse_error` + the enriched flat set.
+    * No envelope column rides along, so the envelope may also carry
+    * columns named like the raw fields. */
+  def transform(envelope: DataFrame,
+                processedAt: Column = current_timestamp()): DataFrame =
+    Enrich.finish(staged(envelope, processedAt, Nil), processedAt = col(BatchTsCol),
+      keep = Seq("parse_error"))
 
   /** S4: nested wire-format output — key = id bytes, value = nested JSON
     * with the reference's omitempty fields dropped (byte parity with
@@ -195,14 +224,9 @@ object StormStream {
     * dead-letter consumer can inspect and replay them. This is the single
     * batch protocol: tests and the deployed Kafka path both run through it.
     *
-    * `processed_at` is the micro-batch timestamp Structured Streaming
-    * records in the offset log: `current_timestamp()` on the streaming
-    * envelope is rewritten to it, so every record of a batch carries the
-    * same value and a batch replayed after a restart (same offsets, same
-    * log entry) comes out byte-identical. Spark inlines that timestamp as
-    * a literal into the small source projection only; the enrichment reads
-    * it as a column, so its generated code is the same in every batch and
-    * Spark's codegen cache compiles it once, not in every batch. */
+    * The query is [[staged]]: the parse and the stage's parses run in the
+    * micro-batch's own plan, which Spark analyses once and only re-plans
+    * per batch, and [[processBatch]] receives their rows. */
   def runWithForeachBatch(
       envelope: DataFrame,
       c: Config,
@@ -210,7 +234,7 @@ object StormStream {
       writePoison: DataFrame => Unit,
       metrics: Option[Metrics] = None,
       queryName: Option[String] = None): StreamingQuery = {
-    val writer = envelope.withColumn(BatchTsCol, current_timestamp())
+    val writer = staged(envelope)
       .writeStream
       .trigger(Trigger.ProcessingTime(c.flushInterval))
       .option("checkpointLocation", c.checkpointDir)
@@ -222,37 +246,32 @@ object StormStream {
       .start()
   }
 
-  /** The batch function of [[runWithForeachBatch]]: `batch` is the
-    * envelope plus the [[BatchTsCol]] column.
+  /** The batch function of [[runWithForeachBatch]]: `batch` holds the rows
+    * of [[staged]].
     *
     * ONE parse per micro-batch: the envelope columns ride through the parse
-    * and [[Enrich.stage]] (`keep`), so the poison split filters the SAME
-    * cached `parse_error` column the good side reads — no second from_json
-    * over the raw value — and the dead-letter rows are the ORIGINAL
-    * envelope columns read back from the cached frame.
+    * and the stage, so the poison split filters the SAME cached
+    * `parse_error` column the good side reads — no second from_json over
+    * the raw value — and the dead-letter rows are the ORIGINAL envelope
+    * columns read back from the cache.
     *
-    * The cache sits between [[Enrich.stage]] and [[Enrich.finish]]: the
-    * parses fill it, and `finish` runs in the good side's wire job. Fused,
-    * parse and enrichment generate one method past HotSpot's 8,000-byte
-    * limit for JIT compilation, so every record ran in the bytecode
-    * interpreter; split at the cache, each stage's methods stay under it,
-    * with no extra job. `enrich = finish ∘ stage`, so the values are those
-    * of [[transform]]. */
+    * The cache holds the staged rows, and [[Enrich.finish]] runs in the
+    * good side's wire job. Fused, parse and enrichment generate one method
+    * past HotSpot's 8,000-byte limit for JIT compilation, so every record
+    * ran in the bytecode interpreter; split at the cache, each stage's
+    * methods stay under it. One job fills the cache, counts both sides and
+    * keeps the first [[MaxPoisonLogLines]] poison provenance lines; the
+    * rest are the sinks' own jobs. */
   private[graft] def processBatch(batch: DataFrame,
                                   writeGood: DataFrame => Unit,
                                   writePoison: DataFrame => Unit,
                                   metrics: Option[Metrics]): Unit = {
-    val envCols = batch.columns.toSeq.filterNot(_ == BatchTsCol)
-    val staged = Enrich.stage(
-      Enrich.parseRawJson(batch, keep = envCols :+ BatchTsCol),
-      keep = ("parse_error" +: envCols) :+ BatchTsCol).cache()
+    val cols = batch.columns.toSeq
+    val envCols = cols.slice(1, cols.indexOf(BatchTsCol))
+    val rows = batch.persist()
     try {
-      // one job counts both sides and materializes the cache
-      val counts = staged.agg(
-        count(when(!col("parse_error"), 1)),
-        count(when(col("parse_error"), 1))).head()
-      val (nGood, nPoison) = (counts.getLong(0), counts.getLong(1))
-      writeGood(toWire(Enrich.finish(staged.filter(!col("parse_error")),
+      val (nGood, nPoison, poisonLines) = countAndLog(rows, envCols)
+      writeGood(toWire(Enrich.finish(rows.filter(!col("parse_error")),
         processedAt = col(BatchTsCol))))
       // produced/error counters mirror the reference's
       // messages_produced_total / transform_errors_total
@@ -261,15 +280,40 @@ object StormStream {
         m.transformErrors.addAndGet(nPoison)
       }
       if (nPoison > 0) {
-        val poison = staged.filter(col("parse_error"))
-          .select(envCols.map(col): _*)
-        poisonLogLines(poison).foreach(log.warn)
+        poisonLines.foreach(log.warn)
         if (nPoison > MaxPoisonLogLines)
           log.warn(s"suppressed ${nPoison - MaxPoisonLogLines} further " +
             "poison provenance lines this batch")
-        writePoison(poison)
+        writePoison(rows.filter(col("parse_error")).select(envCols.map(col): _*))
       }
-    } finally { staged.unpersist(); () }
+    } finally { rows.unpersist(); () }
+  }
+
+  /** One job over `rows` (which it caches, when they are persisted): the
+    * good and poison counts, and the first [[MaxPoisonLogLines]] lines of
+    * [[poisonLogLines]] over the poison rows, in partition order. */
+  private def countAndLog(rows: DataFrame,
+                          envCols: Seq[String]): (Long, Long, Seq[String]) = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val limit = MaxPoisonLogLines
+    val parts = rows
+      .select(col("parse_error"), when(col("parse_error"), poisonLine(envCols)))
+      .as[(Boolean, String)]
+      .mapPartitions { it =>
+        var (good, poison) = (0L, 0L)
+        val lines = Seq.newBuilder[String]
+        it.foreach { case (bad, line) =>
+          if (!bad) good += 1
+          else {
+            if (poison < limit) lines += line
+            poison += 1
+          }
+        }
+        Iterator((good, poison, lines.result()))
+      }
+      .collect()
+    (parts.map(_._1).sum, parts.map(_._2).sum, parts.toSeq.flatMap(_._3).take(limit))
   }
 
   /** Full Kafka→Kafka wiring (deploy-time path; needs the connector jar):
@@ -351,4 +395,16 @@ object StormStream {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("bucket"), col("event_type"),
         col("severity"), col("n"))
+}
+
+/** The micro-batch timestamp of [[StormStream.staged]], evaluated rather
+  * than compiled: generated code reads this expression from the class's
+  * `references[]` and calls `eval`, so the literal Spark substitutes for
+  * `current_timestamp()` in each batch never enters a class's source. */
+private[graft] case class BatchTimestamp(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = child.dataType
+  override protected def nullSafeEval(input: Any): Any = input
+  override protected def withNewChildInternal(newChild: Expression): BatchTimestamp =
+    copy(child = newChild)
 }

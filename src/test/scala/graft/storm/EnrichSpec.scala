@@ -7,7 +7,6 @@ import graft.SparkTestSession
 import graft.streaming.StormStream
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -158,40 +157,38 @@ class EnrichSpec extends AnyFunSuite {
   private val kafkaTs = Timestamp.valueOf("2024-04-26 00:00:00")
   private val processedAt = Timestamp.valueOf("2024-04-27 06:00:00")
 
-  /** A micro-batch as `runWithForeachBatch`'s batch function receives it
-    * from a file source: the `value` line, the envelope `timestamp` and
-    * the micro-batch timestamp column, all read from an RDD (a file
-    * source's projection runs before the batch function's plan). */
-  private def fileBatch(lines: Seq[String]): DataFrame =
+  /** An envelope shaped like the stream's file source: the `value` line
+    * and the envelope `timestamp`, read from an RDD (a file source's
+    * projection runs before the parse). */
+  private def fileEnvelope(lines: Seq[String]): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(lines.map(Row(_, kafkaTs, processedAt)), 2),
-      new StructType().add("value", "string").add("timestamp", "timestamp")
-        .add(StormStream.BatchTsCol, "timestamp"))
+      spark.sparkContext.parallelize(lines.map(Row(_, kafkaTs)), 2),
+      new StructType().add("value", "string").add("timestamp", "timestamp"))
+
+  /** What `runWithForeachBatch` runs per micro-batch over `env`. */
+  private def staged(env: DataFrame): DataFrame =
+    StormStream.staged(env, lit(processedAt))
 
   private val goodLine =
     """{"Time":"1510","Size":"125","Location":"8 ESE Chappel","County":"San Saba",""" +
       """"State":"TX","Lat":"31.02","Lon":"-98.44",""" +
       """"Comments":"1.25 inch hail reported. (SJT)","EventType":"hail"}"""
 
-  /** The executed plans of what the batch function hands its two sinks,
-    * and of the cached stage both sides read. */
-  private def streamBodyPlans(batch: DataFrame): Map[String, SparkPlan] = {
-    var plans = Map.empty[String, SparkPlan]
+  /** The executed plans of the streaming stage over `env`, and of what
+    * the batch function hands its two sinks. */
+  private def streamBodyPlans(env: DataFrame): Map[String, SparkPlan] = {
+    val batch = staged(env)
+    var plans = Map("stage" -> batch.queryExecution.executedPlan)
     StormStream.processBatch(batch,
-      g => {
-        val wire = g.queryExecution.executedPlan
-        plans += "wire" -> wire
-        wire.collectFirst { case s: InMemoryTableScanExec => s.relation.cachedPlan }
-          .foreach(c => plans += "cached stage" -> c)
-      },
+      g => plans += "wire" -> g.queryExecution.executedPlan,
       p => plans += "dead letter" -> p.queryExecution.executedPlan,
       metrics = None)
     plans
   }
 
   test("every generated method of the stream body is under the JIT limit") {
-    val plans = streamBodyPlans(fileBatch(Seq(goodLine, "{not json")))
-    assert(plans.keySet == Set("wire", "cached stage", "dead letter"))
+    val plans = streamBodyPlans(fileEnvelope(Seq(goodLine, "{not json")))
+    assert(plans.keySet == Set("stage", "wire", "dead letter"))
     val sizes = plans.map { case (name, plan) => name -> maxMethodBytes(plan) }
     val huge = sizes.filter(_._2 >= HugeMethodBytes)
     assert(huge.isEmpty, s"generated methods at or over $HugeMethodBytes bytes: $huge")
@@ -202,7 +199,7 @@ class EnrichSpec extends AnyFunSuite {
     // method is past the JIT limit; the guard is its measured size, so it
     // does not grow further unnoticed
     val maxFusedBytes = 8938
-    val env = fileBatch(Seq(goodLine)).drop(StormStream.BatchTsCol)
+    val env = fileEnvelope(Seq(goodLine))
     val fused = maxMethodBytes(StormStream.transform(env).queryExecution.executedPlan)
     assert(fused <= maxFusedBytes,
       s"largest generated method of transform is $fused bytes (guard $maxFusedBytes)")
@@ -225,7 +222,7 @@ class EnrichSpec extends AnyFunSuite {
     }
     val malformed = Seq("{not json", "also-bad", """{"EventType":"hail",""")
     val lines = (goodLine +: generated) ++ malformed
-    val batch = fileBatch(lines)
+    val env = fileEnvelope(lines)
 
     def wireRows(df: DataFrame): Seq[(Seq[Byte], String, Seq[(String, Seq[Byte])])] =
       df.collect().toSeq.map(r => (r.getAs[Array[Byte]]("key").toSeq,
@@ -234,12 +231,11 @@ class EnrichSpec extends AnyFunSuite {
         .sortBy(_._2)
     var good = Seq.empty[(Seq[Byte], String, Seq[(String, Seq[Byte])])]
     var poison = Seq.empty[Row]
-    StormStream.processBatch(batch, g => good = wireRows(g),
+    StormStream.processBatch(staged(env), g => good = wireRows(g),
       p => poison = p.collect().toSeq, metrics = None)
 
-    val envelope = batch.drop(StormStream.BatchTsCol)
     val fused = wireRows(StormStream.toWire(
-      StormStream.transform(envelope, processedAt = lit(processedAt))
+      StormStream.transform(env, processedAt = lit(processedAt))
         .filter(!col("parse_error"))))
     assert(good.size == lines.size - malformed.size)
     assert(good == fused)

@@ -76,41 +76,48 @@ class StormStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** Runs `f` and returns the Java source of every class Spark's code
-    * generator compiled meanwhile: its DEBUG log line carries the source. */
-  private def compiledDuring(f: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
+  /** Runs `f` and returns the messages `logger` logged at `level`
+    * meanwhile, whatever the logger's configured level. */
+  private def logged(logger: String, level: org.apache.logging.log4j.Level)(
+      f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
-      .getLogger("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
+    val log = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger(logger)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("codegen-capture", null, null, true,
+    val capture = new AbstractAppender(s"capture-$logger", null, null, true,
         Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.DEBUG) seen.add(e.getMessage.getFormattedMessage)
+        if (e.getLevel == level) seen.add(e.getMessage.getFormattedMessage)
     }
     capture.start()
-    val (level, additive) = (logger.getLevel, logger.isAdditive)
-    logger.addAppender(capture)
-    logger.setAdditive(false)
-    logger.setLevel(Level.DEBUG)
+    val (was, additive) = (log.getLevel, log.isAdditive)
+    log.addAppender(capture)
+    log.setAdditive(false)
+    log.setLevel(level)
     try f
     finally {
-      logger.setLevel(level)
-      logger.setAdditive(additive)
-      logger.removeAppender(capture)
+      log.setLevel(was)
+      log.setAdditive(additive)
+      log.removeAppender(capture)
       capture.stop()
     }
-    seen.toArray(Array.empty[String]).toSeq.map(_.trim)
+    seen.toArray(Array.empty[String]).toSeq
   }
+
+  /** Runs `f` and returns the Java source of every class Spark's code
+    * generator compiled meanwhile: its DEBUG log line carries the source. */
+  private def compiledDuring(f: => Unit): Seq[String] =
+    logged("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
+      org.apache.logging.log4j.Level.DEBUG)(f).map(_.trim)
 
   /** Feeds four micro-batches of one good and one bad record through the
     * query `start` builds over a MemoryStream envelope, and hands `check`
-    * each batch's number, the query and the classes it compiled. */
+    * each batch's number and the classes it compiled. */
   private def compilesPerBatch(start: DataFrame => StreamingQuery)(
-      check: (Int, StreamingQuery, Seq[String]) => Unit): Unit = {
+      check: (Int, Seq[String]) => Unit): Unit = {
     import org.apache.spark.metrics.source.CodegenMetrics
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
@@ -126,50 +133,98 @@ class StormStreamSpec extends AnyFunSuite {
         }
         assert(compilations - before == compiled.size,
           s"batch $i: the log missed a compilation")
-        check(i, q, compiled)
+        check(i, compiled)
       }
     } finally q.stop()
   }
 
-  /** Java source of each whole-stage-codegen class of the query's last
-    * micro-batch (not of what a foreachBatch function runs over it). */
-  private def wholeStages(q: StreamingQuery): Set[String] =
-    org.apache.spark.sql.execution.debug.codegenStringSeq(q).map(_._2.trim).toSet
-
-  test("Enrich compiles once: later micro-batches compile only the source stage") {
+  test("Enrich compiles once: no class compiles after batch 1") {
     compilesPerBatch(env => StormStream.runWithForeachBatch(env,
       StormStream.Config(checkpointDir =
         java.nio.file.Files.createTempDirectory("ckpt-codegen").toString,
         flushInterval = "0 milliseconds"),
-      g => g.collect(), p => p.collect())) { (i, q, compiled) =>
-      if (i > 1) {
-        // The micro-batch timestamp is a literal in the streaming source
-        // projection, so that stage compiles anew every batch (once on the
-        // driver, once for the task threads' class loader). Everything the
-        // batch function runs over it — parse, Enrich, the count, the
-        // wire projection, the sinks — must hit the codegen cache.
-        val other = compiled.filterNot(wholeStages(q))
-        assert(other.isEmpty, s"batch $i compiled ${other.size} class(es) " +
-          s"besides the source stage:\n${other.map(_.take(600)).mkString("\n---\n")}")
-      }
+      g => g.collect(), p => p.collect())) { (i, compiled) =>
+      // The micro-batch timestamp is evaluated, not compiled, so the
+      // source projection, parse, stage, count, wire projection and sinks
+      // all hit the codegen cache from batch 2 on.
+      if (i > 1) assert(compiled.isEmpty, s"batch $i compiled ${compiled.size} " +
+        s"class(es):\n${compiled.map(_.take(600)).mkString("\n---\n")}")
     }
   }
 
-  test("transform in a streaming query compiles its Enrich stage once") {
-    // Spark evaluates the parse's projection outside whole-stage codegen
-    // (from_json has no generated code), and the micro-batch timestamp
-    // literal lands there; the whole-stage class that holds Enrich reads
-    // `processed_at` as a column, so its source is the same in every batch.
+  test("transform in a streaming query compiles nothing after batch 1") {
     compilesPerBatch(env => StormStream.transform(env).writeStream
       .format("noop")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt-transform").toString)
-      .start()) { (i, q, compiled) =>
-      val enrichStages = compiled.filter(wholeStages(q))
-      if (i == 1) assert(enrichStages.nonEmpty, "batch 1 compiled no Enrich stage")
-      else assert(enrichStages.isEmpty,
-        s"batch $i compiled the Enrich stage ${enrichStages.size} time(s) again")
+      .start()) { (i, compiled) =>
+      if (i == 1) assert(compiled.nonEmpty, "batch 1 compiled nothing")
+      else assert(compiled.isEmpty, s"batch $i compiled ${compiled.size} " +
+        s"class(es):\n${compiled.map(_.take(600)).mkString("\n---\n")}")
     }
+  }
+
+  test("a micro-batch runs one job besides its sinks' own") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // Kafka-shaped envelope: 10 good and 30 poison records over 3 partitions
+    val rows = (0 until 40).map { i =>
+      val v = if (i % 4 == 0) goodJson.replace("1510", f"15${i % 60}%02d") else s"bad $i"
+      Row(v, "raw", i % 2, i.toLong, Timestamp.valueOf("2024-04-26 00:00:00"))
+    }
+    val env = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      new org.apache.spark.sql.types.StructType().add("value", "string")
+        .add("topic", "string").add("partition", "int").add("offset", "long")
+        .add("timestamp", "timestamp"))
+    val batch = StormStream.staged(env, lit(Timestamp.valueOf("2024-04-27 06:00:00")))
+
+    val sc = spark.sparkContext
+    val (group, done) = ("storm-job-shape", "storm-job-shape-done")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(g => g == group || g == done).foreach(jobs.add)
+    }
+    val m = new Metrics
+    var countersInGoodSink = Seq.empty[(Long, Long)]
+    def counters = (m.messagesProduced.get, m.transformErrors.get)
+    var (good, poison) = (0, 0)
+    sc.addSparkListener(listener)
+    val warned = try {
+      logged("graft.streaming.StormStream$", org.apache.logging.log4j.Level.WARN) {
+        sc.setJobGroup(group, group)
+        try StormStream.processBatch(batch,
+          g => {
+            countersInGoodSink :+= counters
+            good = g.collect().length
+            countersInGoodSink :+= counters
+          },
+          p => poison = p.collect().length, Some(m))
+        finally sc.clearJobGroup()
+      }
+    } finally {
+      // listener events arrive in order: once the marker job is seen, so
+      // are all the batch's jobs
+      sc.setJobGroup(done, done)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!jobs.contains(done) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.contains(done), "the marker job's start event never arrived")
+    assert(jobs.toArray.count(_ == group) == 3,
+      "one job to cache, count and log, then one per sink")
+    assert((good, poison) == (10, 30))
+    assert(countersInGoodSink == Seq((0L, 0L), (0L, 0L)))
+    assert(counters == (10L, 30L))
+
+    val poisonRows = batch.filter(col("parse_error"))
+      .select("value", "topic", "partition", "offset", "timestamp")
+    val expected = StormStream.poisonLogLines(poisonRows)
+    assert(expected == (1 until 40).filter(_ % 4 != 0).take(20).map(i =>
+      s"transform failed, skipping message topic=raw partition=${i % 2} offset=$i"))
+    assert(warned == expected :+ "suppressed 10 further poison provenance lines this batch")
   }
 
   test("a batch replayed after a restart is byte-identical on the wire (T2)") {
